@@ -11,10 +11,13 @@ public streaming entry points — the write side of the streaming tier
 - ``drift.drift_monitor_sink``: values drifting batch by batch, scored
   against a fixed binned reference.
 
-Set-up runs a one-file warm-up drain of each entry point, the three
-concurrently; then the three full drains are timed one after another.
-Every drain gets fresh input, checkpoint, manifest and sink directories
-under the run's work dir, which is removed at exit.
+Set-up (``setup_s``) generates the seeded inputs, builds the drift
+reference and stages every drain's input files. The three drains are then
+timed one after another, each from a cold start of its entry point, as a
+bounded drain is launched: the first micro-batch of each carries that cost,
+and the per-batch times in the report show the warm-up trend. Every drain
+gets its own input, checkpoint, manifest and sink directories under the
+run's work dir, which is removed at exit.
 """
 
 from __future__ import annotations
@@ -22,7 +25,6 @@ from __future__ import annotations
 import glob
 import os
 import time
-from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 
@@ -127,12 +129,18 @@ def run(spark, work, seed: int, seconds: float, tracer: Tracer, recorder) -> dic
         sentinel_sessions_stateful,
     )
 
-    inp = Inputs(seed)
     features = [
         ("value", F.floor(F.col("value") / 50.0).cast("long")),
         ("hour", F.hour("ts").cast("long")),
     ]
+    t_setup = time.perf_counter()
+    inp = Inputs(seed)
     ref = reference_counts(spark.createDataFrame(inp.ref), features)
+    staged = {}
+    for kind in KINDS:
+        src = work.sub(kind, "in")
+        staged[kind] = (work.sub(kind), src, inp.stage(src, kind, FILES[kind]))
+    setup_s = time.perf_counter() - t_setup
 
     def traced(fn, group, span):
         """foreachBatch body that sets the drain's job group on the
@@ -146,7 +154,7 @@ def run(spark, work, seed: int, seconds: float, tracer: Tracer, recorder) -> dic
 
         return body
 
-    def dedup(d, src, frames, tag):
+    def dedup(d, src, frames, kind):
         out = os.path.join(d, "kept")
         batch_s = []
 
@@ -164,7 +172,7 @@ def run(spark, work, seed: int, seconds: float, tracer: Tracer, recorder) -> dic
         t0 = time.perf_counter()
         q = (spark.readStream.schema("doc_id long, text string")
              .option("maxFilesPerTrigger", 1).parquet(src)
-             .writeStream.foreachBatch(traced(timed, f"drain-{tag}", "dedup_batch"))
+             .writeStream.foreachBatch(traced(timed, f"drain-{kind}", "dedup_batch"))
              .option("checkpointLocation", os.path.join(d, "ckpt"))
              .trigger(availableNow=True).start())
         ok = q.awaitTermination(120)
@@ -187,7 +195,7 @@ def run(spark, work, seed: int, seconds: float, tracer: Tracer, recorder) -> dic
             "manifest_mb": _dir_mb(os.path.join(d, "hashes")) + _dir_mb(os.path.join(d, "sigs")),
             "batch_s": batch_s}
 
-    def sessions(d, src, frames, tag):
+    def sessions(d, src, frames, kind):
         rows = sum(len(f) for f in frames)
         t0 = time.perf_counter()
         parsed = (spark.readStream.schema("userid int, slot string, song_id int, rating int")
@@ -208,16 +216,24 @@ def run(spark, work, seed: int, seconds: float, tracer: Tracer, recorder) -> dic
         out_rows = sum(p["output_rows"] for p in data)
         state_end = data[-1]["state_rows"] if data else -1
         check = ok and q.exception() is None and state_end == 0 and out_rows == rows
-        return q, elapsed, check, {"output_rows": out_rows, "state_rows_end": state_end}
+        return q, elapsed, check, {
+            "output_rows": out_rows, "state_rows_end": state_end,
+            "batch_s": [p["duration_ms"].get("triggerExecution", 0) / 1e3 for p in data]}
 
-    def drift(d, src, frames, tag):
-        reports = []
-        sink = drift_monitor_sink(ref, features,
-                                  on_report=lambda b, rows: reports.append((b, len(rows))))
+    def drift(d, src, frames, kind):
+        reports, batch_s = [], []
+        monitor = drift_monitor_sink(ref, features,
+                                     on_report=lambda b, rows: reports.append((b, len(rows))))
+
+        def sink(df, batch_id):
+            t0 = time.perf_counter()
+            monitor(df, batch_id)
+            batch_s.append(time.perf_counter() - t0)
+
         t0 = time.perf_counter()
         q = (spark.readStream.schema("event_id long, ts timestamp, value double")
              .option("maxFilesPerTrigger", 1).parquet(src)
-             .writeStream.foreachBatch(traced(sink, f"drain-{tag}", "drift_batch"))
+             .writeStream.foreachBatch(traced(sink, f"drain-{kind}", "drift_batch"))
              .option("checkpointLocation", os.path.join(d, "ckpt"))
              .trigger(availableNow=True).start())
         ok = q.awaitTermination(120)
@@ -226,25 +242,14 @@ def run(spark, work, seed: int, seconds: float, tracer: Tracer, recorder) -> dic
         # check: one report (one row per feature) per micro-batch
         check = (ok and q.exception() is None and len(reports) == len(frames)
                  and all(n == len(features) for _, n in reports))
-        return q, elapsed, check, {"reports": len(reports)}
+        return q, elapsed, check, {"reports": len(reports), "batch_s": batch_s}
 
     drains = {"manifest_dedup": dedup, "sessionization": sessions, "drift_gate": drift}
 
-    def drain(kind, tag, n_files):
-        d = work.sub(tag)
-        src = work.sub(tag, "in")
-        return drains[kind](d, src, inp.stage(src, kind, n_files), tag)
-
-    # set-up: a one-file warm-up drain of each entry point, concurrently
-    with ThreadPoolExecutor(len(KINDS)) as pool:
-        warm = [f.result() for f in
-                [pool.submit(drain, k, f"warm-{k}", 1) for k in KINDS]]
-    setup_times = [w[1] for w in warm]
-    failed_warm = sum(not w[2] for w in warm)
     times, stats, run_ids, failed = {}, {}, set(), 0
     for kind in KINDS:
         with tracer.span("drain", trace_id=kind, group=f"drain-{kind}"):
-            q, times[kind], ok, stats[kind] = drain(kind, kind, FILES[kind])
+            q, times[kind], ok, stats[kind] = drains[kind](*staged[kind], kind)
         failed += not ok
         run_ids.add(str(q.runId))
     ref.unpersist()
@@ -253,8 +258,8 @@ def run(spark, work, seed: int, seconds: float, tracer: Tracer, recorder) -> dic
     result = {
         "attempted": len(KINDS),
         "failed": failed,
-        "correct": failed == 0 and failed_warm == 0,
-        "setup_times": setup_times,
+        "correct": failed == 0,
+        "setup_s": setup_s,
         "op_p50_s": median(every),
         "op_p90_s": quantile(every, 0.9),
         "work_s": sum(every),
@@ -262,10 +267,8 @@ def run(spark, work, seed: int, seconds: float, tracer: Tracer, recorder) -> dic
         "run_ids": run_ids,
         "keep_group": lambda g: g in run_ids or g in {f"drain-{k}" for k in KINDS},
         "report": {
-            "warmup_drain_s": dict(zip(KINDS, setup_times)),
             "drain_s": times,
-            "drain_stats": {k: {a: b for a, b in s.items() if a != "batch_s"}
-                            for k, s in stats.items()},
+            "drain_stats": stats,
         },
     }
     if tracer.enabled:

@@ -4,9 +4,11 @@
   ``<checkout>/.perfbench_work/run-<pid>`` and is removed at exit.
 - :func:`start_spark` — a ``local[4]`` session through the package's own
   ``get_spark``, with Python workers able to import the package.
-- :func:`cpu_probe` — md5 + 512x512 matmul probe, labelled against the
-  first clean record of this CPU model and core count.
-- :func:`peak_rss_mb` — driver JVM + Python peak RSS from ``/proc``.
+- :func:`cpu_probe` — ``bench._calibrate``'s md5 + matmul probe, labelled
+  against the first clean record of this CPU model and core count.
+- :func:`peak_rss_mb` — driver JVM + Python peak RSS from ``/proc``;
+  :func:`peak_heap_mb` — the JVM's peak heap use; :func:`retained_heap_mb`
+  — live objects on the heap at the end of the run.
 - :class:`Tracer` — in-memory spans (name, start, end, parent, trace id,
   job group) with self time.
 - :class:`StreamRecorder` — a ``StreamingQueryListener`` that keeps every
@@ -17,11 +19,12 @@
 
 from __future__ import annotations
 
-import hashlib
+import gc
 import json
 import os
 import re
 import shutil
+import subprocess
 import statistics
 import threading
 import time
@@ -88,11 +91,7 @@ def start_spark(work: Workdir, app: str):
         app,
         master=f"local[{CORES}]",
         extra_conf={
-            "spark.driver.memory": "2g",
-            # a fixed, pre-touched heap: the JVM's part of peak RSS then
-            # does not depend on when G1 chose to grow the heap
-            "spark.driver.extraJavaOptions":
-                f"-Djava.io.tmpdir={tmp} -Xms2g -XX:+AlwaysPreTouch",
+            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp}",
             "spark.local.dir": work.sub("spark-local"),
             "spark.sql.warehouse.dir": work.sub("warehouse"),
             "spark.executorEnv.PYTHONPATH": os.environ["PYTHONPATH"],
@@ -121,36 +120,29 @@ def _cpu_model() -> str:
 
 
 def cpu_probe() -> dict:
-    """Fixed-work probe (32 MB md5, 8 x 512^2 matmul) taken before the JVM
-    starts. The first record of a (CPU model, nproc) box whose load is
-    below half its cores becomes that box's reference; a later probe
-    more than 1.5x slower than it labels the run ``contended``. Nothing
-    waits for a quiet box: the label travels with the record."""
-    import numpy as np
+    """``bench._calibrate``'s fixed-work probe (32 MB md5, 8 x 512^2
+    matmul), taken before the JVM starts. The first record of a (CPU
+    model, nproc) box whose load is below half its cores becomes that
+    box's reference; a later probe more than 1.5x slower than it labels
+    the run ``contended``. Nothing waits for a quiet box: the label
+    travels with the record."""
+    from bench import _calibrate
 
-    buf = b"\xab" * (32 << 20)
-    t0 = time.perf_counter()
-    hashlib.md5(buf).hexdigest()
-    md5_s = time.perf_counter() - t0
-    a = np.ones((512, 512))
-    t0 = time.perf_counter()
-    for _ in range(8):
-        a = a @ a % 7.0
-    matmul_s = time.perf_counter() - t0
+    calib = _calibrate()
+    md5_s, matmul_s = calib["md5_32mb_sec"], calib["matmul_512_sec"]
     nproc = os.cpu_count() or 1
-    load = os.getloadavg()[0]
+    load = calib["loadavg_1m"]
     key = f"{_cpu_model()} x{nproc}"
     path = os.path.join(STATE_DIR, "probe_ref.json")
     refs: dict = {}
     if os.path.exists(path):
         with open(path) as f:
             refs = json.load(f)
-    probe = {"box": key, "md5_s": round(md5_s, 4),
-             "matmul_s": round(matmul_s, 4), "loadavg_1m": round(load, 2)}
+    probe = {"box": key, "md5_s": md5_s, "matmul_s": matmul_s, "loadavg_1m": load}
     ref = refs.get(key)
     if ref is None:
         if load < nproc / 2:
-            refs[key] = {"md5_s": probe["md5_s"], "matmul_s": probe["matmul_s"]}
+            refs[key] = {"md5_s": md5_s, "matmul_s": matmul_s}
             os.makedirs(STATE_DIR, exist_ok=True)
             with open(path, "w") as f:
                 json.dump(refs, f, indent=1)
@@ -173,7 +165,8 @@ def cpu_ticks() -> tuple[int, int]:
 
 def peak_rss_mb(spark) -> float:
     """Peak resident set (VmHWM) of this Python process plus the driver
-    JVM, in MB."""
+    JVM, in MB. The heap is the package's default (grown by G1 as it is
+    used), so heap growth counts here."""
     jvm_pid = int(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
     total_kb = 0
     for pid in {os.getpid(), jvm_pid}:
@@ -182,6 +175,45 @@ def peak_rss_mb(spark) -> float:
                 if line.startswith("VmHWM:"):
                     total_kb += int(line.split()[1])
     return total_kb / 1024.0
+
+
+def retained_heap_mb(spark) -> float:
+    """Live objects on the driver JVM heap at the end of the run, in MB:
+    what the program's state (cached history and model, manifests, state
+    stores, retained plans) keeps alive, counted object by object in the
+    JVM's class histogram (``jcmd <pid> GC.class_histogram``, which
+    collects first).
+
+    Just after a stream stops, its stopping tasks still hold memory pages
+    for a second or so (~200 MB on stream_curation), and Spark's
+    ContextCleaner frees the blocks of dead RDDs and broadcasts on its
+    own thread; so the histogram is read every 0.5 s until it stops
+    shrinking."""
+    jvm = spark.sparkContext._jvm
+    pid = jvm.java.lang.ProcessHandle.current().pid()
+    jcmd = os.path.join(jvm.System.getProperty("java.home"), "bin", "jcmd")
+    live = []
+    for _ in range(10):
+        gc.collect()  # Python proxies keep their JVM objects alive
+        out = subprocess.run([jcmd, str(pid), "GC.class_histogram"], capture_output=True,
+                             text=True, check=True, timeout=60).stdout
+        # last line: "Total <instances> <bytes>"
+        live.append(int(out.strip().splitlines()[-1].split()[2]) / 2**20)
+        if len(live) > 1 and live[-1] > live[-2] - 1.0:
+            break
+        time.sleep(0.5)
+    return min(live)
+
+
+def peak_heap_mb(spark) -> float:
+    """Sum of the driver JVM's heap memory pools' peak usage, in MB."""
+    jvm = spark.sparkContext._jvm
+    heap = jvm.java.lang.management.MemoryType.HEAP
+    return sum(
+        p.getPeakUsage().getUsed()
+        for p in jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans()
+        if p.getType().equals(heap)
+    ) / 2**20
 
 
 # --- tracing ------------------------------------------------------------

@@ -3,12 +3,16 @@ to completion through the noop sink, one at a time, after a warm pass.
 
 Inputs are the sf0.01 star-schema tables committed under
 ``perfbench/data/sf0.01`` (the benchmark reads nothing outside its
-checkout). The seed sets the query order. The warm pass (set-up; four
-queries at a time) collects each query's rows and checks row count and an order-insensitive fingerprint
-against the DuckDB oracle values pinned in ``oracles.json``
-(``pin_oracles.py`` recomputes them). Two measured passes follow (the
-seeded order, then reversed); each query's time is its faster pass, split
-into the registry call (driver plan build) and the noop write.
+checkout). The query list is ``bench.HEADLINE``; the seed sets its order.
+The warm pass (set-up, one query at a time; its total is ``setup_s``)
+collects each query's rows and checks row count and an order-insensitive
+fingerprint against the DuckDB oracle values pinned in ``oracles.json``
+(``pin_oracles.py`` recomputes them). One measured pass follows in the
+same order, with the cache cleared and garbage collected between queries
+as in ``bench.py``; each query's time is split into the registry call
+(driver plan build) and the noop write. ``bench.py`` keeps the faster of
+two measured passes; one pass is what fits the run-time budget
+(README.md).
 """
 
 from __future__ import annotations
@@ -21,27 +25,14 @@ import json
 import os
 import random
 import time
-from concurrent.futures import ThreadPoolExecutor
 from contextlib import nullcontext
 
+from bench import HEADLINE
 from harness import Tracer, job_group, median, quantile
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 DATA_DIR = os.path.join(HERE, "data", "sf0.01")
 ORACLES = os.path.join(HERE, "oracles.json")
-WARM_THREADS = 4
-PASSES = 2
-
-HEADLINE = [
-    "pricing_summary", "counts_and_averages", "top_revenue_join",
-    "filter_project", "percentile_buckets", "window_topk_per_customer",
-    "json_extract_sum", "word_count", "dedup_exact", "dedup_minhash_lsh",
-    "dedup_simhash", "ann_topk_bruteforce", "ann_topk_lsh", "ann_topk_ivf",
-    "quality_scores", "doc_fingerprints", "asof_click_view",
-    "band_join_click_error", "tumbling_hourly_stats", "rollup_revenue",
-    "corpus_clean_pipeline", "dedup_clusters", "gap_fill_hourly",
-    "etl_ratings_pipeline",
-]
 
 #: Queries whose physical plan holds a Python-worker node (ArrowEvalPython,
 #: MapInPandas, FlatMapGroupsInPandas, BatchEvalPython), pinned once by
@@ -90,10 +81,13 @@ def fingerprint(columns: list[str], rows) -> str:
 
 
 def _release(spark) -> None:
-    """Between queries, outside timing: drop the previous query's cached
-    blocks and Python garbage."""
+    """Before each measured query, outside timing, as ``bench.py`` does:
+    drop cached blocks and Python garbage and collect the JVM heap, so no
+    query pays for the garbage of the one before it (the seed sets the
+    order)."""
     spark.catalog.clearCache()
     gc.collect()
+    spark._jvm.System.gc()
 
 
 def run(spark, seed: int, seconds: float, tracer: Tracer) -> dict:
@@ -107,44 +101,36 @@ def run(spark, seed: int, seconds: float, tracer: Tracer) -> dict:
     def group(name, prefix):
         return job_group(spark, f"{prefix}-{name}") if tracer.enabled else nullcontext()
 
-    # warm pass (set-up): first run of every plan shape, WARM_THREADS
-    # queries at a time; each result is checked against its oracle pin
-    def warm(name):
+    # warm pass (set-up): first run of every plan shape, one query at a
+    # time; each result is checked against its oracle pin
+    setup_s, bad = 0.0, []
+    for name in order:
         with group(name, "warm"):
             t0 = time.perf_counter()
             df = QUERIES[name](spark, DATA_DIR)
             rows = df.collect()
-            dt_s = time.perf_counter() - t0
+            setup_s += time.perf_counter() - t0
         pin = pins[name]
-        ok = len(rows) == pin["rows"] and fingerprint(df.columns, rows) == pin["fingerprint"]
-        return dt_s, ok
-
-    with ThreadPoolExecutor(WARM_THREADS) as pool:
-        warmed = list(pool.map(warm, order))
-    setup_times = [w[0] for w in warmed]
-    bad = [name for name, w in zip(order, warmed) if not w[1]]
+        if len(rows) != pin["rows"] or fingerprint(df.columns, rows) != pin["fingerprint"]:
+            bad.append(name)
+        del df, rows
+        spark.catalog.clearCache()
     _release(spark)
 
-    # measured: PASSES passes (seeded order, then reversed); each query
-    # reports its fastest pass, so one transient stall is not its cost
+    # measured: one pass in the seeded order
     times, build, exe = {}, {}, {}
-    passes = []
-    for p in range(PASSES):
-        passes.append(0.0)
-        for name in (order if p % 2 == 0 else order[::-1]):
-            with group(name, "query"), tracer.span("query", trace_id=name,
-                                                   group=f"query-{name}"):
-                t0 = time.perf_counter()
-                with tracer.span("queries.build"):
-                    df = QUERIES[name](spark, DATA_DIR)
-                t1 = time.perf_counter()
-                with tracer.span("queries.exec"):
-                    df.write.format("noop").mode("overwrite").save()
-                t2 = time.perf_counter()
-            passes[-1] += t2 - t0
-            if t2 - t0 < times.get(name, float("inf")):
-                times[name], build[name], exe[name] = t2 - t0, t1 - t0, t2 - t1
-            _release(spark)
+    for name in order:
+        with group(name, "query"), tracer.span("query", trace_id=name,
+                                               group=f"query-{name}"):
+            t0 = time.perf_counter()
+            with tracer.span("queries.build"):
+                df = QUERIES[name](spark, DATA_DIR)
+            t1 = time.perf_counter()
+            with tracer.span("queries.exec"):
+                df.write.format("noop").mode("overwrite").save()
+            t2 = time.perf_counter()
+        times[name], build[name], exe[name] = t2 - t0, t1 - t0, t2 - t1
+        _release(spark)
 
     total = sum(times.values())
     named = {
@@ -153,10 +139,10 @@ def run(spark, seed: int, seconds: float, tracer: Tracer) -> dict:
         "pyudf_s": sum(t for q, t in times.items() if q in PYUDF),
     }
     result = {
-        "attempted": len(order) * PASSES,
+        "attempted": len(order),
         "failed": len(bad),
         "correct": not bad,
-        "setup_times": setup_times,
+        "setup_s": setup_s,
         "op_p50_s": median(list(times.values())),
         "op_p90_s": quantile(list(times.values()), 0.9),
         "work_s": total,
@@ -165,8 +151,8 @@ def run(spark, seed: int, seconds: float, tracer: Tracer) -> dict:
         "report": {
             "order": order,
             "oracle_mismatch": bad,
-            "warm_pass_s": sum(setup_times),
-            "measured_pass_s": passes,
+            "warm_pass_s": setup_s,
+            "measured_pass_s": sum(times.values()),
             "query_s": {q: round(t, 4) for q, t in times.items()},
         },
     }

@@ -17,7 +17,8 @@ import os
 import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, HERE)
+# the benchmark's modules, then the checkout root (the package, bench.py)
+sys.path[:0] = [HERE, os.path.dirname(HERE)]
 
 import harness  # noqa: E402
 import headline  # noqa: E402
@@ -26,7 +27,6 @@ import headline  # noqa: E402
 def main() -> int:
     import duckdb
 
-    sys.path.insert(0, harness.ROOT)
     os.environ["TZ"] = "UTC"
     from spark_streaming_kafka_spark.queries import ORACLES, QUERIES
 
