@@ -4,11 +4,13 @@
   ``<checkout>/.perfbench_work/run-<pid>`` and is removed at exit.
 - :func:`start_spark` — a ``local[4]`` session through the package's own
   ``get_spark``, with Python workers able to import the package.
+- :func:`stop_spark` — stops the session and waits until the driver JVM
+  and every other process under this one has ended.
 - :func:`cpu_probe` — ``bench._calibrate``'s md5 + matmul probe, labelled
   against the first clean record of this CPU model and core count.
 - :func:`peak_rss_mb` — driver JVM + Python peak RSS from ``/proc``;
   :func:`peak_heap_mb` — the JVM's peak heap use; :func:`retained_heap_mb`
-  — live objects on the heap at the end of the run.
+  — heap in use after full collections at the end of the run.
 - :class:`Tracer` — in-memory spans (name, start, end, parent, trace id,
   job group) with self time.
 - :class:`StreamRecorder` — a ``StreamingQueryListener`` that keeps every
@@ -24,6 +26,7 @@ import json
 import os
 import re
 import shutil
+import signal
 import subprocess
 import statistics
 import threading
@@ -106,6 +109,91 @@ def start_spark(work: Workdir, app: str):
     return spark
 
 
+def stop_spark() -> None:
+    """Stop the session and wait until its driver JVM and every process
+    under this one has ended.
+
+    The JVM exits only once it reads end-of-file on its stdin, which
+    otherwise happens after this process has exited — leaving the JVM
+    running past the end of the run. So its stdin is closed here and the
+    JVM is waited for (killed if it hangs); any other descendant still
+    running (Python workers) is then terminated and waited for too.
+    Safe to call when the session failed to start."""
+    from pyspark import SparkContext
+
+    procs = _descendants(os.getpid())
+    gateway = SparkContext._gateway
+    try:
+        if SparkContext._active_spark_context is not None:
+            SparkContext._active_spark_context.stop()
+    finally:
+        jvm = getattr(gateway, "proc", None)
+        if jvm is not None:
+            if jvm.stdin is not None:
+                jvm.stdin.close()
+            try:
+                jvm.wait(60)
+            except subprocess.TimeoutExpired:
+                jvm.kill()
+                jvm.wait()
+        SparkContext._gateway = SparkContext._jvm = None
+        _reap(procs + _descendants(os.getpid()))
+
+
+def _descendants(root: int) -> list[tuple[int, str]]:
+    """(pid, start time) of every live descendant of ``root``, from /proc."""
+    children: dict[int, list[tuple[int, str]]] = {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except (OSError, IndexError):
+            continue
+        # after the command: state, ppid, ..., start time (field 22)
+        children.setdefault(int(fields[1]), []).append((int(d), fields[19]))
+    out, todo = [], [root]
+    while todo:
+        for child in children.get(todo.pop(), []):
+            out.append(child)
+            todo.append(child[0])
+    return out
+
+
+def _alive(pid: int, start: str) -> bool:
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+    except (OSError, IndexError):
+        return False
+    return fields[19] == start and fields[0] not in ("Z", "X")
+
+
+def _reap(procs: list[tuple[int, str]], timeout: float = 10.0) -> None:
+    """SIGTERM every process still alive, SIGKILL what outlives
+    ``timeout``, and return once all of them have ended."""
+    for sig in (signal.SIGTERM, signal.SIGKILL):
+        live = [p for p in procs if _alive(*p)]
+        for pid, _ in live:
+            try:
+                os.kill(pid, sig)
+            except OSError:
+                pass
+        deadline = time.time() + timeout
+        while live and time.time() < deadline:
+            for pid, _ in live:
+                try:  # reaps our own children; others are reaped by init
+                    os.waitpid(pid, os.WNOHANG)
+                except ChildProcessError:
+                    pass
+            live = [p for p in live if _alive(*p)]
+            if live:
+                time.sleep(0.05)
+        if not live:
+            return
+
+
 # --- box probe ----------------------------------------------------------
 
 def _cpu_model() -> str:
@@ -177,31 +265,34 @@ def peak_rss_mb(spark) -> float:
     return total_kb / 1024.0
 
 
-def retained_heap_mb(spark) -> float:
-    """Live objects on the driver JVM heap at the end of the run, in MB:
-    what the program's state (cached history and model, manifests, state
-    stores, retained plans) keeps alive, counted object by object in the
-    JVM's class histogram (``jcmd <pid> GC.class_histogram``, which
-    collects first).
+#: Consecutive equal readings that end :func:`retained_heap_mb`.
+STABLE_READS = 4
 
-    Just after a stream stops, its stopping tasks still hold memory pages
-    for a second or so (~200 MB on stream_curation), and Spark's
-    ContextCleaner frees the blocks of dead RDDs and broadcasts on its
-    own thread; so the histogram is read every 0.5 s until it stops
-    shrinking."""
+
+def retained_heap_mb(spark) -> float:
+    """Live data on the driver JVM heap at the end of the run, in MB:
+    what the program's state (cached history and model, manifests, state
+    stores, retained plans) keeps alive — heap in use just after a full,
+    compacting collection (``System.gc()`` under G1).
+
+    Just after a stream or query ends, its last task pages (~200 MB of
+    ``long[]`` on stream_curation and batch_headline) stay reachable for
+    a second or two: Python proxies release their JVM objects lazily, and
+    Spark's ContextCleaner frees the blocks of dead RDDs and broadcasts
+    on its own thread. So the heap is collected and read every 0.25 s
+    until ``STABLE_READS`` readings in a row agree within 1 MB, and the
+    smallest reading is reported."""
     jvm = spark.sparkContext._jvm
-    pid = jvm.java.lang.ProcessHandle.current().pid()
-    jcmd = os.path.join(jvm.System.getProperty("java.home"), "bin", "jcmd")
+    memory = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
     live = []
-    for _ in range(10):
+    for _ in range(STABLE_READS * 10):
         gc.collect()  # Python proxies keep their JVM objects alive
-        out = subprocess.run([jcmd, str(pid), "GC.class_histogram"], capture_output=True,
-                             text=True, check=True, timeout=60).stdout
-        # last line: "Total <instances> <bytes>"
-        live.append(int(out.strip().splitlines()[-1].split()[2]) / 2**20)
-        if len(live) > 1 and live[-1] > live[-2] - 1.0:
+        jvm.System.gc()
+        live.append(memory.getHeapMemoryUsage().getUsed() / 2**20)
+        last = live[-STABLE_READS:]
+        if len(last) == STABLE_READS and max(last) - min(last) < 1.0:
             break
-        time.sleep(0.5)
+        time.sleep(0.25)
     return min(live)
 
 

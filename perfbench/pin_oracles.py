@@ -52,8 +52,8 @@ def main() -> int:
             if headline.fingerprint(df.columns, srows) != pins[name]["fingerprint"]:
                 mismatch.append(name)
             print(name, pins[name], flush=True)
-        spark.stop()
     finally:
+        harness.stop_spark()
         work.close()
     with open(headline.ORACLES, "w") as f:
         json.dump({"data": "data/sf0.01", "queries": pins}, f, indent=1)

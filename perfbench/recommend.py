@@ -174,8 +174,8 @@ def run(spark, work, seed: int, seconds: float, tracer: Tracer,
         "failed": checks.pop("failed_batches"),
         "correct": all(v for v in checks.values() if isinstance(v, bool)),
         "setup_s": setup_s,
-        "op_p50_s": named["rec_latency_p50_s"] if live else named["cycle_p50_s"],
-        "op_p90_s": named["rec_latency_p90_s"] if live else named["cycle_p90_s"],
+        # an operation: one event's latency (live), one cycle (backlog)
+        "op_mean_s": float(np.mean(lat if live else cycles)),
         # live: busy time over the run's fixed events (stable whether
         # they arrive in five batches or six); backlog: drain wall time
         "work_s": sum(cycles) if live else elapsed,

@@ -10,6 +10,9 @@ with ``--trace 1``. The line before it is a report: the workload's own
 named metrics (README.md), the CPU probe, output checks, warm-up trends
 and, when traced, the full per-layer table. Exit status is 0 only when every output check passed.
 
+``headline_curation`` runs stream_curation and then batch_headline in one
+session, as one workload (README.md, "Budget").
+
 ``--workload all`` runs every workload (recommend_backlog included) in
 child processes and prints every named end-to-end metric with setup_s; with
 ``--trace 1`` it also runs each traced and prints the tracing overhead.
@@ -21,6 +24,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import signal
 import subprocess
 import sys
 import time
@@ -33,12 +37,15 @@ import harness  # noqa: E402
 
 WORKLOADS = ("recommend_live", "recommend_backlog", "batch_headline", "stream_curation")
 
+#: Workloads that run others one after another in one session; their
+#: operations, set-up and work add up (README.md, "Budget").
+COMBINED = {"headline_curation": ("stream_curation", "batch_headline")}
+
 #: Gated end-to-end metrics, common to every workload (README.md).
 END_TO_END = {
     "setup_s": "s",
     "retained_heap_mb": "MB",
-    "op_p50_s": "s",
-    "op_p90_s": "s",
+    "op_mean_s": "s",
     "work_s": "s",
 }
 
@@ -59,8 +66,8 @@ NAMED = {
 PER_LAYER = (
     "spark.jobs", "spark.stages", "spark.tasks", "spark.executor_run_s",
     "spark.executor_cpu_s", "spark.shuffle_read_mb", "spark.shuffle_write_mb",
-    "traced.setup_s", "traced.retained_heap_mb", "traced.op_p50_s",
-    "traced.op_p90_s", "traced.work_s",
+    "traced.setup_s", "traced.retained_heap_mb", "traced.op_mean_s",
+    "traced.work_s",
 )
 
 
@@ -109,30 +116,17 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool) -> int:
     probe = harness.cpu_probe()
     ticks0 = harness.cpu_ticks()
     work = harness.Workdir()
-    spark = None
     try:
         spark = harness.start_spark(work, f"perfbench-{name}")
         tracer = harness.Tracer(trace)
         recorder = harness.StreamRecorder(spark)
-        if name in ("recommend_live", "recommend_backlog"):
-            import recommend
-
-            res = recommend.run(spark, work, seed, seconds, tracer,
-                                live=name == "recommend_live")
-        elif name == "batch_headline":
-            import headline
-
-            res = headline.run(spark, seed, seconds, tracer)
-        else:
-            import curation
-
-            res = curation.run(spark, work, seed, seconds, tracer, recorder)
+        res = _combine([_run_one(part, spark, work, seed, seconds, tracer, recorder)
+                        for part in COMBINED.get(name, (name,))])
         res["named"]["peak_rss_mb"] = harness.peak_rss_mb(spark)
         values = {
             "setup_s": res["setup_s"],
             "retained_heap_mb": harness.retained_heap_mb(spark),
-            "op_p50_s": res["op_p50_s"],
-            "op_p90_s": res["op_p90_s"],
+            "op_mean_s": res["op_mean_s"],
             "work_s": res["work_s"],
         }
         report = {
@@ -152,8 +146,7 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool) -> int:
         else:
             metrics = {k: {"value": v, "unit": END_TO_END[k]} for k, v in values.items()}
     finally:
-        if spark is not None:
-            spark.stop()
+        harness.stop_spark()
         work.close()
     print("perfbench-report " + json.dumps(report, default=float))
     print(json.dumps({
@@ -163,6 +156,45 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool) -> int:
         "metrics": metrics,
     }))
     return 0 if res["correct"] and res["failed"] == 0 else 1
+
+
+def _run_one(name, spark, work, seed, seconds, tracer, recorder) -> dict:
+    if name in ("recommend_live", "recommend_backlog"):
+        import recommend
+
+        return recommend.run(spark, work, seed, seconds, tracer,
+                             live=name == "recommend_live")
+    if name == "batch_headline":
+        import headline
+
+        return headline.run(spark, seed, seconds, tracer)
+    import curation
+
+    return curation.run(spark, work, seed, seconds, tracer, recorder)
+
+
+def _combine(parts: list[dict]) -> dict:
+    """One result from workloads run one after another: counts, set-up
+    and work add up; the operation quantiles are taken over every
+    operation of every part."""
+    if len(parts) == 1:
+        return parts[0]
+    ops = [t for p in parts for t in p["ops"]]
+    keeps = [p["keep_group"] for p in parts]
+    merged = {
+        "attempted": sum(p["attempted"] for p in parts),
+        "failed": sum(p["failed"] for p in parts),
+        "correct": all(p["correct"] for p in parts),
+        "setup_s": sum(p["setup_s"] for p in parts),
+        "op_mean_s": sum(ops) / len(ops),
+        "work_s": sum(p["work_s"] for p in parts),
+        "ops": ops,
+        "run_ids": set().union(*(p.get("run_ids", ()) for p in parts)),
+        "keep_group": lambda g: any(keep(g) for keep in keeps),
+    }
+    for key in ("named", "report", "layers"):
+        merged[key] = {k: v for p in parts for k, v in p.get(key, {}).items()}
+    return merged
 
 
 def _layer_metrics(spark, tracer, recorder, res, values, name, seed) -> dict:
@@ -222,9 +254,17 @@ def run_all(seed: int, seconds: float, trace: bool) -> int:
     return 0 if ok else 1
 
 
+def _terminated(signum, frame):
+    # SIGTERM unwinds like an error, so the session is stopped, every
+    # process under this one ends and the work dir is removed
+    sys.exit(128 + signum)
+
+
 def main() -> int:
+    signal.signal(signal.SIGTERM, _terminated)
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--workload", required=True, choices=WORKLOADS + ("all",))
+    ap.add_argument("--workload", required=True,
+                    choices=WORKLOADS + tuple(COMBINED) + ("all",))
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
