@@ -14,19 +14,29 @@ Mechanical deltas from the reference, by design:
 - Candidate generation is a left_anti join (``catalog − rated``)
   instead of the driver-list NOT-IN with the exhausted-generator bug
   (``spark_kafka.py:108-110``).
-- The serving join (predictions ⋈ titles ⋈ rating-counts) is one
-  3-way broadcast join + TakeOrderedAndProject — zero driver collects
-  until the final result (the reference did 4 driver round-trips per
-  request, SURVEY.md §3 E1).
+- Batch serving (``get_top_ratings_for_users``) scores straight from the
+  ALS factors: the batch users' factor rows (userFactors ⋈ broadcast
+  users) cross the one broadcast item table (itemFactors ⋈ supported
+  rating counts ⋈ titles), a codegen'd float dot product scores every
+  pair, a left-anti join drops the pairs the users already rated, and
+  one window per user keeps the top k. No factor table is shuffled and
+  nothing is collected to the driver until the result (the reference
+  did 4 driver round-trips per request, SURVEY.md §3 E1). The
+  single-user and pair paths keep ``ALSModel.transform``.
 - Retrain is explicit (``retrain()``), not implicit per added batch:
   full-refit ALS per micro-batch is the reference's dominant cost and
   is not sustainable at its own 1 s interval; cadence is the caller's
   policy knob (see streaming/recommend_stream.py).
 
 Scale: ALS itself is Spark-distributed (block factorization). The
-ratings union grows unboundedly — ``add_ratings`` checkpoints lineage
-via a localCheckpoint every ``_CHECKPOINT_EVERY`` batches so the plan
-doesn't deepen linearly over a long-lived stream.
+history is an engine-owned localCheckpoint snapshot from construction
+on, so no batch re-analyses the caller's plan (a ``createDataFrame``
+history is a LocalRelation holding every row, which every later plan
+would otherwise carry and re-analyse). The
+ratings union grows unboundedly — ``add_ratings`` re-snapshots it every
+``_CHECKPOINT_EVERY`` batches so the plan doesn't deepen linearly over
+a long-lived stream, coalesced back to the construction snapshot's
+partition count so tasks per batch don't grow either.
 """
 
 from __future__ import annotations
@@ -62,9 +72,12 @@ class RecommendationEngine:
         min_ratings: int = 25,
     ) -> None:
         """``ratings``: (user_id int, song_id int, rating double);
-        ``metadata``: song catalog with at least (new_song_ID, title)."""
+        ``metadata``: song catalog with at least (new_song_ID, title).
+
+        ``ratings`` is materialized once into an engine-owned snapshot;
+        the caller's DataFrame (and any cache on it) is not touched
+        again."""
         self.spark = spark
-        self.ratings = ratings.cache()
         self.metadata = metadata.cache() if metadata is not None else None
         self.rank = rank
         self.max_iter = max_iter
@@ -74,7 +87,32 @@ class RecommendationEngine:
         self.model: ALSModel | None = None
         self._adds_since_checkpoint = 0
         self._ckpt_rdd_ids: set[int] = set()
+        self.ratings = self._snapshot(ratings)
+        self._history_partitions = self.ratings.rdd.getNumPartitions()
         self._refresh_counts()
+
+    def _snapshot(self, df: DataFrame) -> DataFrame:
+        """``df`` materialized as the engine's history snapshot (an eager
+        localCheckpoint: a ``LogicalRDD`` plan), freeing the previous
+        snapshot's blocks by RDD id — ``DataFrame.unpersist()`` does not
+        release a localCheckpoint's internal RDD (see operators/dedup.py::
+        _unpersist_rdds)."""
+        from .operators.dedup import _unpersist_rdds
+
+        snap = df.localCheckpoint(eager=True)
+        _unpersist_rdds(self.spark.sparkContext, self._ckpt_rdd_ids)
+        self._ckpt_rdd_ids = {snap._jdf.queryExecution().logical().rdd().id()}
+        return snap
+
+    def unpersist(self) -> None:
+        """Free everything the engine keeps resident: the history
+        snapshot, the cached union on top of it and the rating counts."""
+        from .operators.dedup import _unpersist_rdds
+
+        self.ratings.unpersist()
+        self.rating_counts.unpersist()
+        _unpersist_rdds(self.spark.sparkContext, self._ckpt_rdd_ids)
+        self._ckpt_rdd_ids = set()
 
     # -- reference: engine.py:20-28 (__count_and_average_ratings) -------
     def _refresh_counts(self) -> None:
@@ -101,28 +139,20 @@ class RecommendationEngine:
         """Union new ratings into history (U1). The reference retrains on
         every add; here it's a flag so streaming callers set cadence.
 
-        Storage is strictly bounded on a long-lived stream: exactly one
-        ratings snapshot stays resident. On checkpoint cycles the union
-        is NOT separately cached (localCheckpoint materializes it), and
-        the PREVIOUS cycle's checkpoint blocks are freed explicitly by
-        RDD id — ``DataFrame.unpersist()`` does not release a
-        localCheckpoint's internal RDD (see operators/dedup.py::
-        _unpersist_rdds), which previously leaked one full snapshot per
-        cycle."""
-        from .operators.dedup import _persistent_rdd_ids, _unpersist_rdds
-
-        sc = self.spark.sparkContext
+        Storage is strictly bounded on a long-lived stream: one history
+        snapshot (the construction snapshot, later each checkpoint
+        cycle's) plus at most one cached union on top of it stay
+        resident. Each add caches the new union and frees the previous
+        one. On checkpoint cycles the union is NOT separately cached
+        (localCheckpoint materializes it) and the previous snapshot's
+        blocks are freed by RDD id (see ``_snapshot``)."""
         old = self.ratings
         union = union_ratings(self.ratings, new_ratings)
         self._adds_since_checkpoint += 1
         if self._adds_since_checkpoint >= _CHECKPOINT_EVERY:
-            # Truncate lineage: after N unions the plan is N levels deep;
-            # localCheckpoint materializes and resets it.
-            pre = _persistent_rdd_ids(sc)
-            self.ratings = union.localCheckpoint(eager=True)
-            new_ckpt = _persistent_rdd_ids(sc) - pre
-            _unpersist_rdds(sc, self._ckpt_rdd_ids)
-            self._ckpt_rdd_ids = new_ckpt
+            # Truncate lineage: after N unions the plan is N levels deep
+            # and N batches' partitions wide; the snapshot resets both.
+            self.ratings = self._snapshot(union.coalesce(self._history_partitions))
             self._adds_since_checkpoint = 0
         else:
             self.ratings = union.cache()
@@ -165,33 +195,64 @@ class RecommendationEngine:
     def get_top_ratings_for_users(self, users: DataFrame, k: int = 25) -> DataFrame:
         """Batch form of :meth:`get_top_ratings`: top-k unrated songs for
         EVERY user in ``users`` (a one-column user_id DataFrame) in ONE
-        distributed job.
+        distributed plan.
 
-        Same semantics per user as the single-user path (candidates =
-        supported catalog − user's rated songs; order by predicted_rating
-        desc, song_id asc), but the anti-join, ALS transform, context
-        joins, and per-user top-k all happen batch-wide: a micro-batch
-        with 10k distinct users is still one Spark job, not 10k jobs with
-        a 10k-deep union plan (reference served one user per request,
-        ``engine.py:73-81``).
+        Same rows per user as the single-user path, bit for bit
+        (candidates = supported catalog − user's rated songs, scored by
+        the model; order by predicted_rating desc, song_id asc), but
+        scored straight from the ALS factors instead of
+        ``ALSModel.transform``, whose two sort-merge joins shuffle both
+        full factor tables on every call:
+
+        - the batch users' factor rows: userFactors ⋈ broadcast(distinct
+          users) — users without factors yet (cold start) drop out here,
+          as ``coldStartStrategy="drop"`` drops them in ``transform``;
+        - crossed with ONE broadcast item table: itemFactors ⋈ supported
+          rating counts (⋈ titles when ``metadata`` is set);
+        - scored by a codegen'd float expression that adds the products
+          left to right from 0.0f, the same accumulation as ALS's own
+          prediction, so the scores equal ``transform``'s exactly;
+        - minus the batch users' rated pairs (broadcast left-anti join);
+        - top-k per user by one window (``per_group_top_k``).
+
+        A micro-batch with 10k distinct users is still one plan, not 10k
+        jobs with a 10k-deep union plan (reference served one user per
+        request, ``engine.py:73-81``).
         """
         self._require_model()
         from .operators.windows import per_group_top_k
 
         users = users.select("user_id").distinct()
-        support = self.rating_counts.filter(
-            F.col("n_ratings") >= self.min_ratings
-        ).select("song_id")
-        # candidate grid: batch users × supported songs (support is the
-        # small side — broadcast); minus each user's rated history.
-        cand = users.crossJoin(F.broadcast(support))
-        rated = semi_join(
-            self.ratings.select("user_id", "song_id"), users, "user_id"
+        user_f = self.model.userFactors.select(
+            F.col("id").alias("user_id"), F.col("features").alias("uf")
+        ).join(F.broadcast(users), "user_id")
+        items = self.model.itemFactors.select(
+            F.col("id").alias("song_id"), F.col("features").alias("vf")
+        ).join(
+            self.rating_counts.filter(F.col("n_ratings") >= self.min_ratings),
+            "song_id",
         )
-        cand = anti_join(cand, rated, ["user_id", "song_id"])
-        scored = self._with_context(self.model.transform(cand))
+        context = [F.col("n_ratings").alias("num_ratings"), "avg_rating"]
+        if self.metadata is not None:
+            items = items.join(self._titles(), "song_id")
+            context.append("title")
+        dot = " + ".join(
+            ["CAST(0.0 AS FLOAT)"]
+            + [f"uf[{d}] * vf[{d}]" for d in range(self.model.rank)]
+        )
+        scored = user_f.crossJoin(F.broadcast(items)).select(
+            "user_id",
+            "song_id",
+            F.expr(dot).alias("predicted_rating"),
+            *context,
+        )
+        # Both hints keep the history and the scored grid unshuffled:
+        # the batch users and their rated pairs are the small sides.
+        rated = semi_join(
+            self.ratings.select("user_id", "song_id"), F.broadcast(users), "user_id"
+        )
         return per_group_top_k(
-            scored,
+            anti_join(scored, F.broadcast(rated), ["user_id", "song_id"]),
             "user_id",
             [F.col("predicted_rating").desc(), F.col("song_id").asc()],
             k,
@@ -237,9 +298,9 @@ class RecommendationEngine:
         (reference grid {4,8,12} → best 4), refit on train+val, then
         score the held-out test split (reference ``spark_music.py:53-56``)
         — exposed as ``final.test_rmse_`` so the 20% test partition is
-        actually consumed, not silently discarded. Candidate engines'
-        caches are released as they are discarded (each run used to leak
-        its rating_counts cache for the session's lifetime)."""
+        actually consumed, not silently discarded. Each candidate engine
+        owns a snapshot of the train split; its storage (snapshot and
+        rating counts) is freed as soon as it is discarded."""
         train, val, test = ratings.randomSplit([0.6, 0.2, 0.2], seed=seed_split)
         rmses: dict[int, float] = {}
         best_rank, best = None, float("inf")
@@ -250,8 +311,7 @@ class RecommendationEngine:
             rmses[rank] = r
             if r < best:
                 best, best_rank = r, rank
-            eng.rating_counts.unpersist()  # candidate discarded
-        train.unpersist()  # candidates shared one cached train split
+            eng.unpersist()  # candidate discarded
         final = cls(spark, train.unionByName(val), metadata, rank=best_rank, **kwargs)
         final.retrain()
         final.test_rmse_ = final.evaluate_rmse(test)
@@ -279,12 +339,12 @@ class RecommendationEngine:
             "avg_rating",
         ]
         if self.metadata is not None:
-            meta = self.metadata.select(
-                F.col("new_song_ID").alias("song_id"), "title"
-            )
-            out = out.join(F.broadcast(meta), "song_id")
+            out = out.join(F.broadcast(self._titles()), "song_id")
             cols.append("title")
         return out.select(*cols)
+
+    def _titles(self) -> DataFrame:
+        return self.metadata.select(F.col("new_song_ID").alias("song_id"), "title")
 
     def _require_model(self) -> None:
         if self.model is None:

@@ -2,9 +2,10 @@
 walkthroughs are part of the shipped surface, so CI runs them instead
 of trusting them (the r4 verdict flagged examples as unexecuted).
 
-Each script builds its own SparkSession in a subprocess; sf0.001 keeps
-the whole sweep to ~1 min. A non-zero exit or traceback fails the
-test."""
+Each script builds its own SparkSession in a subprocess (a fresh JVM
+per script) at sf0.001; the 13 runs took 381 s in all on a 4-vCPU
+VM, about a quarter of the tier-1 wall time. A non-zero exit or
+traceback fails the test."""
 
 from __future__ import annotations
 

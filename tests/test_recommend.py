@@ -46,23 +46,105 @@ def test_top_ratings_excludes_rated(engine, ratings):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_batch_serving_matches_per_user_path(spark, engine):
-    """get_top_ratings_for_users == per-user get_top_ratings for every
-    user, and the batch plan is ONE job with no per-user Union chain
-    (the round-1 streaming loop launched one job per distinct user)."""
-    users = spark.createDataFrame([(3,), (5,), (7,)], "user_id int")
-    batch = engine.get_top_ratings_for_users(users, k=10)
-    assert "Union" not in batch._jdf.queryExecution().optimizedPlan().toString()
-    got = {
-        u: [(r["song_id"], round(r["predicted_rating"], 4)) for r in rows]
-        for u, rows in _by_user(batch.collect()).items()
+def _rows(df):
+    """(song_id, predicted_rating, num_ratings, avg_rating[, title]) per
+    user, in served order — compared exactly, not rounded."""
+    cols = [c for c in ("song_id", "predicted_rating", "num_ratings",
+                        "avg_rating", "title") if c in df.columns]
+    return {
+        u: [tuple(r[c] for c in cols) for r in rows]
+        for u, rows in _by_user(df.collect()).items()
     }
-    for uid in (3, 5, 7):
-        want = [
-            (r["song_id"], round(r["predicted_rating"], 4))
-            for r in engine.get_top_ratings(uid, k=10).collect()
-        ]
-        assert got[uid] == want
+
+
+def test_batch_serving_matches_per_user_path(spark, engine, ratings):
+    """get_top_ratings_for_users == per-user get_top_ratings (which scores
+    through ALSModel.transform) for every user, bit for bit, at rank 4
+    and at a rank whose factor length is not a multiple of 4; and the
+    batch plan is ONE plan with no per-user Union chain (the round-1
+    streaming loop launched one job per distinct user)."""
+    rank7 = RecommendationEngine(spark, ratings, rank=7, max_iter=5, min_ratings=1)
+    rank7.retrain()
+    users = spark.createDataFrame([(3,), (5,), (7,)], "user_id int")
+    for eng in (engine, rank7):
+        batch = eng.get_top_ratings_for_users(users, k=10)
+        assert "Union" not in batch._jdf.queryExecution().optimizedPlan().toString()
+        got = _rows(batch)
+        for uid in (3, 5, 7):
+            assert got[uid] == _rows(eng.get_top_ratings(uid, k=10))[uid]
+    rank7.unpersist()
+
+
+def test_batch_serving_scores_from_broadcast_factors(spark, engine):
+    """The serve plan joins the factor tables by broadcast only: no
+    sort-merge join (ALSModel.transform plans two, each shuffling a full
+    factor table)."""
+    users = spark.createDataFrame([(3,), (5,)], "user_id int")
+    plan = engine.get_top_ratings_for_users(users, k=5)._jdf.queryExecution()
+    plan = plan.executedPlan().toString()
+    assert "Scan userFactors" in plan and "Scan itemFactors" in plan
+    assert "SortMergeJoin" not in plan
+
+
+def test_batch_serving_skips_cold_start_users(spark, ratings):
+    """A user rated after the last retrain has no factors yet: they get
+    no rows and no error, and the other users are served as before."""
+    eng = RecommendationEngine(spark, ratings, rank=4, max_iter=3, min_ratings=1)
+    eng.retrain()
+    new = spark.createDataFrame(
+        [(5000, 1, 5.0)], "user_id int, song_id int, rating double"
+    )
+    eng.add_ratings(new, retrain=False)
+    users = spark.createDataFrame([(5000,), (3,)], "user_id int")
+    got = _rows(eng.get_top_ratings_for_users(users, k=5))
+    assert set(got) == {3}
+    assert len(got[3]) == 5
+    eng.unpersist()
+
+
+def test_batch_serving_carries_titles(spark, ratings):
+    """With ``metadata`` the served rows carry the song title, and songs
+    missing from the catalog are not served (same as get_top_ratings)."""
+    meta = spark.createDataFrame(
+        [(s, f"song-{s}") for s in range(40) if s != 7], "new_song_ID int, title string"
+    )
+    eng = RecommendationEngine(spark, ratings, meta, rank=4, max_iter=3, min_ratings=1)
+    eng.retrain()
+    users = spark.createDataFrame([(3,), (4,)], "user_id int")
+    got = _rows(eng.get_top_ratings_for_users(users, k=40))
+    for uid in (3, 4):
+        assert got[uid] == _rows(eng.get_top_ratings(uid, k=40))[uid]
+        assert all(row[-1] == f"song-{row[0]}" for row in got[uid])
+        assert 7 not in {row[0] for row in got[uid]}
+    eng.unpersist()
+
+
+def test_history_is_engine_owned_snapshot(spark, ratings):
+    """After construction the history's plan is the engine's own
+    checkpoint (a LogicalRDD), not the caller's plan, so no batch
+    re-analyses the caller's lineage."""
+    caller = ratings.filter(F.col("rating") > 0)  # a plan, not an RDD
+    eng = RecommendationEngine(spark, caller, min_ratings=1)
+    logical = eng.ratings._jdf.queryExecution().logical()
+    assert logical.getClass().getSimpleName() == "LogicalRDD"
+    assert eng.ratings.count() == caller.count()
+    eng.unpersist()
+
+
+def test_checkpoint_cycle_restores_partition_count(spark, ratings):
+    """Each add unions the batch's partitions into the history; the
+    every-10 checkpoint coalesces back to the construction snapshot's
+    count, so tasks per batch do not grow for the life of a stream."""
+    eng = RecommendationEngine(spark, ratings, min_ratings=1)
+    n0 = eng.ratings.rdd.getNumPartitions()
+    new = spark.createDataFrame(
+        [(999, 1, 5.0)], "user_id int, song_id int, rating double"
+    )
+    for _ in range(10):
+        eng.add_ratings(new, retrain=False)
+    assert eng.ratings.rdd.getNumPartitions() == n0
+    assert eng.ratings.count() == ratings.count() + 10
+    eng.unpersist()
 
 
 def _by_user(rows):
@@ -182,18 +264,46 @@ def test_add_ratings_bounds_persisted_storage(spark, tables):
         .dropDuplicates(["user_id", "song_id"])
     )
     sc = spark.sparkContext
-    before = len(_persistent_rdd_ids(sc))
+    before = _persistent_rdd_ids(sc)
     eng = RecommendationEngine(spark, ratings, None)
+    # the construction snapshot is the one RDD the engine persists
+    assert _persistent_rdd_ids(sc) - before == eng._ckpt_rdd_ids
+    assert len(eng._ckpt_rdd_ids) == 1
     new = spark.createDataFrame(
         [(999, 1, 5.0)], "user_id int, song_id int, rating double"
     )
     for _ in range(25):  # crosses two checkpoint cycles
         eng.add_ratings(new, retrain=False)
-    after = len(_persistent_rdd_ids(sc))
-    assert after - before <= 4  # bounded, not ~2 per cycle
+    after = _persistent_rdd_ids(sc)
+    assert len(after - before) <= 4  # bounded, not ~2 per cycle
 
-    eng.ratings.unpersist()
-    eng.rating_counts.unpersist()
+    eng.unpersist()
+    assert not _persistent_rdd_ids(sc) - before
+
+
+def _engine_rdds(sc, ids):
+    """Persisted RDD ids among ``ids`` that are not ALS factor tables
+    (those belong to a model and go with it)."""
+    live = sc._jsc.getPersistentRDDs()
+    names = {i: live.get(i).name() for i in ids if live.get(i) is not None}
+    return {i for i, n in names.items() if n not in ("userFactors", "itemFactors")}
+
+
+def test_best_rank_search_frees_candidate_storage(spark, ratings):
+    """Every candidate engine snapshots its own train split; each is
+    freed when the candidate is discarded, so only the final engine's
+    snapshot stays (besides the ALS models' factor tables)."""
+    from spark_streaming_kafka_spark.operators.dedup import _persistent_rdd_ids
+
+    sc = spark.sparkContext
+    before = _persistent_rdd_ids(sc)
+    eng, _ = RecommendationEngine.train_best_rank(
+        spark, ratings, ranks=(2, 4, 6), min_ratings=1
+    )
+    new = _engine_rdds(sc, _persistent_rdd_ids(sc) - before)
+    assert new == eng._ckpt_rdd_ids
+    eng.unpersist()
+    assert not _engine_rdds(sc, _persistent_rdd_ids(sc) - before)
 
 
 # ---------------------------------------------------------------------

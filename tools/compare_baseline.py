@@ -5,10 +5,13 @@ Contextualizes BENCH numbers against a single-process columnar engine
 numbers). Both engines run warm; DuckDB gets all threads.
 
 Usage: python tools/compare_baseline.py [sf_dir] [--json OUT.json]
-                                        [--queries NAME ...]
+                                        [--queries NAME [NAME ...]]
 Prints one JSON line: {query: {"duckdb": s, "spark": s, "ratio": r}}.
 Default query set is the bench HEADLINE suite; ``--queries`` appends
-extra registry names (r12: the rewritten pipeline-tier queries).
+extra registry names (r12: the rewritten pipeline-tier queries). Every
+name must be registered: ``--queries`` takes all the words after it,
+so an ``sf_dir`` given after it is an error, not a silent query name —
+give ``sf_dir`` first.
 
 Reading the ratios (see README "Performance vs single-process
 baseline"): sub-100 ms DuckDB queries sit under Spark's ~0.3 s per-job
@@ -18,6 +21,7 @@ queries with real compute land within ~2x either way.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -27,18 +31,24 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-_args = list(sys.argv[1:])
-JSON_OUT = None
-if "--json" in _args:
-    i = _args.index("--json")
-    JSON_OUT = _args[i + 1]
-    del _args[i : i + 2]
-EXTRA_QUERIES: list[str] = []
-if "--queries" in _args:
-    i = _args.index("--queries")
-    EXTRA_QUERIES = _args[i + 1 :]
-    del _args[i:]
-SF_DIR = _args[0] if _args else "/root/testdata/sf0.1"
+
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    import bench
+    from spark_streaming_kafka_spark.queries import REGISTRY
+
+    ap = argparse.ArgumentParser(
+        description="Spark bench queries vs their DuckDB oracle, same SF."
+    )
+    ap.add_argument("sf_dir", nargs="?", default=bench.SF_DIR)
+    ap.add_argument("--json", dest="json_out", metavar="OUT.json")
+    ap.add_argument("--queries", nargs="+", default=[], metavar="NAME",
+                    help="extra registry queries (give sf_dir before this)")
+    args = ap.parse_args(argv)
+    unknown = [q for q in args.queries if q not in REGISTRY]
+    if unknown:
+        ap.error(f"unknown query name(s) {unknown}; an sf_dir goes before --queries")
+    return args
+
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -46,6 +56,8 @@ TABLES = (
 
 
 def main() -> None:
+    args = parse_args()
+    sf_dir = args.sf_dir
     import bench
     from spark_streaming_kafka_spark import get_spark
     from spark_streaming_kafka_spark.queries import REGISTRY
@@ -53,7 +65,7 @@ def main() -> None:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
     spark = get_spark("compare_baseline")
@@ -62,13 +74,13 @@ def main() -> None:
     import gc
 
     out: dict[str, dict[str, float]] = {}
-    for name in list(bench.HEADLINE) + EXTRA_QUERIES:
+    for name in list(bench.HEADLINE) + args.queries:
         fn, sql = REGISTRY[name]
         spark.catalog.clearCache()  # release blocks orphaned upstream
         gc.collect()
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()  # warm
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
         t0 = time.time()
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         s_spark = time.time() - t0
         if sql is None:
             out[name] = {"spark": round(s_spark, 3)}
@@ -83,9 +95,9 @@ def main() -> None:
             "ratio": round(s_spark / s_duck, 2) if s_duck > 0 else None,
         }
     print(json.dumps(out))
-    if JSON_OUT:
-        with open(JSON_OUT, "w") as f:
-            json.dump({"sf_dir": SF_DIR, "queries": out}, f, indent=1)
+    if args.json_out:
+        with open(args.json_out, "w") as f:
+            json.dump({"sf_dir": sf_dir, "queries": out}, f, indent=1)
     spark.stop()
 
 
