@@ -11,15 +11,15 @@ like-for-like): ``pipeline`` is the LLM-data-pipeline tier added in
 r7 so the newer operator families (CDC rewrite, DSIR, winnowing,
 BM25/RRF retrieval, sketches, governance splits, BPE) sit on a
 measured perf path too — a regression there was previously invisible
-to any committed number. Same noop-sink, warm-up + min-of-2 protocol.
+to any committed number.
 
-Each query is forced with the noop sink (full materialization, no
-driver transfer, no result-size bias). The suite runs TWICE: the first
-pass (unmeasured) pays one-time JVM/codegen/JIT warm-up per plan shape,
-the second pass is what's reported — steady-state, which is how these
-plans actually run in a long-lived cluster session. Cold numbers are
-dominated by whole-stage-codegen compilation (~3-4s per novel plan
-shape), a per-plan constant that is irrelevant at 100 TB.
+Both suites run under :func:`measure`, the one timing protocol every
+Spark-timing tool in ``tools/`` shares: each query forced with the
+noop sink, one unmeasured warm-up pass, then the per-query min of two
+measured passes with the previous query's cache and garbage released
+before each run. Cold numbers are dominated by whole-stage-codegen
+compilation (~3-4s per novel plan shape), a per-plan constant that is
+irrelevant at 100 TB.
 """
 
 from __future__ import annotations
@@ -103,14 +103,9 @@ def _calibrate() -> dict:
     calib_md5 compares like-for-like across sessions. Also records the
     1-min load average at start so contention is visible in the artifact.
     """
-    import hashlib
-
     import numpy as np
 
-    buf = b"\xab" * (32 << 20)
-    t0 = time.perf_counter()
-    hashlib.md5(buf).hexdigest()
-    md5_sec = time.perf_counter() - t0
+    md5_sec = _quick_md5_sec()
     a = np.ones((512, 512))
     t0 = time.perf_counter()
     for _ in range(8):
@@ -194,9 +189,111 @@ PIPELINE = [
 SUITES = {"headline": HEADLINE, "pipeline": PIPELINE}
 
 
+def _min_of(names, passes: int, run, release) -> dict[str, float]:
+    """One unmeasured pass of ``run`` over ``names``, then ``passes``
+    measured passes with ``release()`` before every measured run; the
+    per-name minimum in seconds."""
+    for name in names:
+        run(name)
+    best: dict[str, float] = {}
+    for _ in range(passes):
+        for name in names:
+            release()
+            t0 = time.perf_counter()
+            run(name)
+            dt = time.perf_counter() - t0
+            best[name] = min(best.get(name, dt), dt)
+    return best
+
+
+def noop_run(spark, sf_dir: str):
+    """``run(name)`` for :func:`measure` over ``sf_dir``: a registry
+    query forced with the noop sink (full materialization, no driver
+    transfer, no result-size bias), or a streaming micro-bench drained
+    to completion (bounded stream, its own sink)."""
+    from spark_streaming_kafka_spark.queries import QUERIES
+    from spark_streaming_kafka_spark.streaming.microbench import STREAM_MICRO
+
+    def run(name: str) -> None:
+        if name in STREAM_MICRO:
+            STREAM_MICRO[name](spark, sf_dir)
+        else:
+            QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+
+    return run
+
+
+def measure(spark, names, passes: int = 2, run=None) -> dict[str, float]:
+    """The timing protocol every Spark measurement in the repo shares:
+    per-name minimum seconds of ``run(name)`` (default: ``noop_run`` at
+    ``SF_DIR``) over ``passes`` measured passes.
+
+    The first pass is unmeasured: it pays the one-time JVM/codegen/JIT
+    warm-up per plan shape, so the measured passes are steady state,
+    which is how these plans run in a long-lived session. Reporting the
+    per-name MIN means one transient stall (GC pause, CPU contention
+    from an unrelated process) can't masquerade as a plan cost. Before
+    every measured run:
+
+    - ``clearCache`` + ``gc.collect()`` drop blocks orphaned by the
+      PREVIOUS run (iterative ops localCheckpoint per round; the RDD
+      blocks are only released when Python refs die);
+    - ``System.gc()`` pays the previous run's JVM garbage here, not
+      inside the next measurement: the Arrow/pandas-UDF heavyweights
+      leave allocation debt that taxes whatever runs next by ~0.5 s
+      (measured r8: etl after minhash/quality/word_count ran 1.4-1.6 s
+      vs 0.87 s consecutive; an explicit gc between recovered ~0.4 s).
+      Per-job execution would never carry a neighbor's heap state.
+
+    Every name must be a registry query or a streaming micro-bench; an
+    unknown one raises ``ValueError`` before any Spark work.
+    """
+    import gc
+
+    from spark_streaming_kafka_spark.queries import QUERIES
+    from spark_streaming_kafka_spark.streaming.microbench import STREAM_MICRO
+
+    unknown = [n for n in names if n not in QUERIES and n not in STREAM_MICRO]
+    if unknown:
+        raise ValueError(f"not a registry query or stream micro-bench: {unknown}")
+
+    def release() -> None:
+        spark.catalog.clearCache()
+        gc.collect()
+        spark._jvm.System.gc()
+
+    return _min_of(names, passes, run or noop_run(spark, SF_DIR), release)
+
+
+def duckdb_times(sf_dir: str, sqls: dict[str, str]) -> dict[str, float]:
+    """:func:`measure`'s protocol for DuckDB (all threads): one view per
+    ``<table>.parquet`` in ``sf_dir`` — a parquet file or a Spark
+    part-file directory — then per-name minimum seconds of fetching
+    ``sqls[name]`` over two measured passes after a warm one. DuckDB
+    holds no cache between queries, so nothing is released."""
+    import duckdb
+
+    con = duckdb.connect()
+    for entry in sorted(os.listdir(sf_dir)):
+        table, ext = os.path.splitext(entry)
+        if ext != ".parquet":
+            continue
+        path = os.path.join(sf_dir, entry)
+        if os.path.isdir(path):
+            path = os.path.join(path, "*.parquet")
+        con.execute(f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{path}')")
+    try:
+        return _min_of(
+            list(sqls), 2, lambda n: con.execute(sqls[n]).fetchall(), lambda: None
+        )
+    finally:
+        con.close()
+
+
 def main() -> None:
     from spark_streaming_kafka_spark import get_spark
-    from spark_streaming_kafka_spark.queries import QUERIES
 
     # Opt-in workload profile (tuning.py): SPARK_GRAFT_PROFILE=batch_etl
     # layers that profile's conf delta over the session defaults, scaled
@@ -233,47 +330,7 @@ def main() -> None:
 
     spark = get_spark("bench", extra_conf=extra_conf)
     spark.sparkContext.setLogLevel("ERROR")
-
-    from spark_streaming_kafka_spark.streaming.microbench import STREAM_MICRO
-
-    def run_once(name: str) -> None:
-        if name in STREAM_MICRO:
-            STREAM_MICRO[name](spark, SF_DIR)  # bounded stream, own sink
-        else:
-            QUERIES[name](spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-
-    # pass 1 (unmeasured): compile/JIT every plan shape once
-    for name in suite:
-        run_once(name)
-
-    # passes 2-3 (measured): steady-state; report the per-query MIN so
-    # one transient stall (GC pause, CPU contention from an unrelated
-    # process) can't masquerade as a plan cost
-    import gc
-
-    timings: dict[str, float] = {}
-    for _ in range(2):
-        for name in suite:
-            # drop blocks orphaned by the PREVIOUS query (iterative ops
-            # localCheckpoint per round; the RDD blocks are only released
-            # when Python refs die) so they can't distort this measurement
-            spark.catalog.clearCache()
-            gc.collect()
-            # and pay the PREVIOUS query's JVM garbage here, not inside
-            # the next measurement: the Arrow/pandas-UDF heavyweights
-            # leave allocation debt that taxes whatever runs next by
-            # ~0.5 s (measured r8: etl after minhash/quality/word_count
-            # runs 1.4-1.6 s vs 0.87 s consecutive; an explicit gc
-            # between recovers ~0.4 s of that). Same rationale as
-            # clearCache above — per-job execution would never carry a
-            # neighbor's heap state.
-            spark._jvm.System.gc()
-            t0 = time.time()
-            run_once(name)
-            dt = round(time.time() - t0, 3)
-            timings[name] = min(timings.get(name, dt), dt)
+    timings = {n: round(s, 3) for n, s in measure(spark, suite).items()}
 
     sf = 0.1
     try:

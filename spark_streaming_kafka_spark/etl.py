@@ -143,13 +143,6 @@ def bucket_ratings(triplets: DataFrame) -> DataFrame:
     return out.withColumn("level", F.col("level").cast("double"))
 
 
-def top_songs(triplets: DataFrame, n: int = 200) -> DataFrame:
-    """#cell12-13 — top-n songs by total listens (deterministic: ties
-    broken by song_id)."""
-    totals = grouped_sum(triplets, "song_id", "listen_count", "total")
-    return top_k(totals, [F.col("total").desc(), F.col("song_id").asc()], n)
-
-
 def build_ratings(
     triplets: DataFrame,
     min_count: int = 2,

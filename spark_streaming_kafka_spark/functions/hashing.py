@@ -34,15 +34,6 @@ def md5_long(col: Column | str, fast: bool = False) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
-def universal_hash(h: Column, a: int, b: int, p: int = MERSENNE_P) -> Column:
-    """Universal hash family member: (a*h + b) mod p.
-
-    ``h`` must be < 2^60 / a to avoid 64-bit overflow; md5_long values are
-    reduced mod p first so a*h stays < 2^62.
-    """
-    return (F.lit(a) * (h % F.lit(p)) + F.lit(b)) % F.lit(p)
-
-
 def duckdb_md5_long(expr: str) -> str:
     """DuckDB SQL fragment equivalent to :func:`md5_long` — used by the
     oracle queries so both engines hash identically."""

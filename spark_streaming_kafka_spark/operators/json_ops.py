@@ -9,7 +9,7 @@ single pass; works identically on batch columns and Kafka stream values.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -28,10 +28,3 @@ def extract_json_fields(
     parsed = parse_json(df, col, schema)
     keep_cols = keep if keep is not None else [c for c in df.columns if c != col]
     return parsed.select(*keep_cols, "j.*")
-
-
-def to_json_value(*cols: Column) -> Column:
-    """Inverse: pack columns into a JSON string (Kafka value building —
-    replaces the reference's str(tuple) message format,
-    ``spark_streaming_kafka.py:72``)."""
-    return F.to_json(F.struct(*cols))

@@ -166,20 +166,13 @@ def top_k(
     return df.orderBy(*order).limit(k)
 
 
-# --- set ops (U1–U2) ----------------------------------------------------
+# --- set ops (U1) -------------------------------------------------------
 
 def union_ratings(history: DataFrame, new: DataFrame) -> DataFrame:
     """U1 — append by column NAME (``unionByName``), not position; the
     reference's positional RDD union silently mis-merges reordered
     inputs."""
     return history.unionByName(new)
-
-
-def split_train_val_test(
-    df: DataFrame, weights: Sequence[float] = (0.6, 0.2, 0.2), seed: int = 0
-) -> list[DataFrame]:
-    """U2 — seeded random split (reference ``randomSplit([6,2,2], 0)``)."""
-    return df.randomSplit(list(weights), seed=seed)
 
 
 def intersect_keys(a: DataFrame, b: DataFrame, keys: list[str]) -> DataFrame:

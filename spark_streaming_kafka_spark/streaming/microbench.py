@@ -27,6 +27,7 @@ Workloads (one per streaming family with real per-batch state):
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -44,7 +45,15 @@ _PREPARED_ROWS: dict[str, int] = {}
 _N_BATCHES = 8
 
 
+@atexit.register
+def _remove_prepared() -> None:
+    for d in _PREPARED.values():
+        shutil.rmtree(d, ignore_errors=True)
+
+
 def _prep(kind: str, sf_dir: str, build) -> str:
+    """Source dir for ``(kind, sf_dir)``: built once per process, reused
+    by every later invocation, removed at interpreter exit."""
     key = (kind, sf_dir)
     if key not in _PREPARED:
         d = tempfile.mkdtemp(prefix=f"microbench_{kind}_")

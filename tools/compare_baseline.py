@@ -2,7 +2,9 @@
 
 Contextualizes BENCH numbers against a single-process columnar engine
 (the closest measurable stand-in for BASELINE.md, which publishes no
-numbers). Both engines run warm; DuckDB gets all threads.
+numbers). Both engines run bench.py's protocol (``bench.measure`` /
+``bench.duckdb_times``: a warm pass, then the min of two measured
+passes); DuckDB gets all threads.
 
 Usage: python tools/compare_baseline.py [sf_dir] [--json OUT.json]
                                         [--queries NAME [NAME ...]]
@@ -25,15 +27,13 @@ import argparse
 import json
 import os
 import sys
-import time
-
-import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
+
 
 def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
-    import bench
     from spark_streaming_kafka_spark.queries import REGISTRY
 
     ap = argparse.ArgumentParser(
@@ -50,45 +50,27 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     return args
 
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
 def main() -> None:
     args = parse_args()
     sf_dir = args.sf_dir
-    import bench
     from spark_streaming_kafka_spark import get_spark
     from spark_streaming_kafka_spark.queries import REGISTRY
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
+    names = list(bench.HEADLINE) + args.queries
     spark = get_spark("compare_baseline")
     spark.sparkContext.setLogLevel("ERROR")
-
-    import gc
+    spark_s = bench.measure(spark, names, run=bench.noop_run(spark, sf_dir))
+    duck_s = bench.duckdb_times(
+        sf_dir, {n: REGISTRY[n][1] for n in names if REGISTRY[n][1] is not None}
+    )
 
     out: dict[str, dict[str, float]] = {}
-    for name in list(bench.HEADLINE) + args.queries:
-        fn, sql = REGISTRY[name]
-        spark.catalog.clearCache()  # release blocks orphaned upstream
-        gc.collect()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        s_spark = time.time() - t0
-        if sql is None:
+    for name in names:
+        s_spark = spark_s[name]
+        if name not in duck_s:
             out[name] = {"spark": round(s_spark, 3)}
             continue
-        con.execute(sql).fetchall()  # warm
-        t0 = time.time()
-        con.execute(sql).fetchall()
-        s_duck = time.time() - t0
+        s_duck = duck_s[name]
         out[name] = {
             "duckdb": round(s_duck, 3),
             "spark": round(s_spark, 3),

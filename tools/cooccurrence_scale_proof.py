@@ -12,8 +12,9 @@ DuckDB oracle at both scales, and writes docs/COOC_SCALE_PROOF.md.
 
 Usage: python tools/cooccurrence_scale_proof.py [sf01_dir] [work_dir]
 
-Protocol: both engines warm (one untimed run), then min of 2 timed
-runs; run uncontended. The synthesized input lives under work_dir
+Protocol: bench.py's (``bench.measure`` / ``bench.duckdb_times``):
+both engines warm (one untimed run), then min of 2 timed runs; run
+uncontended. The synthesized input lives under work_dir
 (default /tmp/cooc_sf1) and is NOT committed — only the measurements.
 """
 
@@ -22,16 +23,16 @@ from __future__ import annotations
 import math
 import os
 import sys
-import time
-
-import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
 
 SF01 = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 WORK = sys.argv[2] if len(sys.argv) > 2 else "/tmp/cooc_sf1"
 REPS = 10
 OFFSET = 100_000_000
+NAME = "part_cooccurrence_topk"
 OUT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "docs",
@@ -57,51 +58,22 @@ def synthesize(spark) -> None:
     open(os.path.join(WORK, "_DONE"), "w").write("ok")
 
 
-def time_spark(spark, sf_dir: str) -> float:
-    from spark_streaming_kafka_spark.queries import QUERIES
-
-    fn = QUERIES["part_cooccurrence_topk"]
-
-    def run() -> float:
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    run()  # warm
-    return min(run(), run())
-
-
-def time_duckdb(sf_dir: str) -> float:
-    from spark_streaming_kafka_spark.queries import REGISTRY
-
-    sql = REGISTRY["part_cooccurrence_topk"][1]
-    con = duckdb.connect()
-    path = f"{sf_dir}/lineitem.parquet"
-    if os.path.isdir(path):  # Spark writes a directory of part files
-        path = f"{path}/*.parquet"
-    con.sql(f"CREATE VIEW lineitem AS SELECT * FROM '{path}'")
-
-    def run() -> float:
-        t0 = time.perf_counter()
-        con.sql(sql).fetchall()
-        return time.perf_counter() - t0
-
-    run()  # warm
-    return min(run(), run())
-
-
 def main() -> None:
     from spark_streaming_kafka_spark import get_spark
+    from spark_streaming_kafka_spark.queries import REGISTRY
 
     os.makedirs(WORK, exist_ok=True)
     spark = get_spark("cooc-scale-proof")
     spark.sparkContext.setLogLevel("ERROR")
     synthesize(spark)
 
-    s01 = time_spark(spark, SF01)
-    s1 = time_spark(spark, WORK)
-    d01 = time_duckdb(SF01)
-    d1 = time_duckdb(WORK)
+    s01, s1 = (
+        bench.measure(spark, [NAME], run=bench.noop_run(spark, d))[NAME]
+        for d in (SF01, WORK)
+    )
+    sql = {NAME: REGISTRY[NAME][1]}
+    d01, d1 = (bench.duckdb_times(d, sql)[NAME] for d in (SF01, WORK))
+    master = spark.sparkContext.master
     spark.stop()
 
     exp = math.log10(s1 / s01)
@@ -111,8 +83,8 @@ def main() -> None:
         "",
         f"Input: `{SF01}` lineitem replicated {REPS}x with shifted order "
         "keys (same part catalog: 10x baskets, 10x per-item support, "
-        "items-sized output). Warm min-of-2 both engines, same box, "
-        "same session.",
+        f"items-sized output). Warm min-of-2 both engines, {master}, "
+        "same box, same session.",
         "",
         "| scale | spark s | duckdb s | spark/duckdb |",
         "|---|---|---|---|",

@@ -13,6 +13,8 @@ grow linearly with the corpus instead of quadratically colliding
 symlink to sf0.1.
 
 Usage: python tools/docs_scale_proof.py
+
+Protocol: bench.py's (``bench.measure``), once per corpus.
 """
 
 from __future__ import annotations
@@ -21,9 +23,10 @@ import math
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.1"
@@ -82,30 +85,23 @@ def synth_10x(spark) -> str:
     return WORK
 
 
-def time_query(fn, spark, sf_dir: str) -> float:
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t0)
-    return best
-
-
 def main() -> None:
     from spark_streaming_kafka_spark import get_spark
-    from spark_streaming_kafka_spark.queries import QUERIES
 
     spark = get_spark("docs-scale-proof")
     spark.sparkContext.setLogLevel("ERROR")
     ten_dir = synth_10x(spark)
+    t1s, t10s = (
+        bench.measure(spark, QUERIES_UNDER_TEST, run=bench.noop_run(spark, d))
+        for d in (SF_DIR, ten_dir)
+    )
 
     lines = [
         "# Documents-pipeline 10× scale proof (generated by tools/docs_scale_proof.py)",
         "",
         "sf0.1 documents (5k docs) vs a synthesized 10× corpus (50k docs,",
         "token-disjoint copies — dedup outputs grow linearly, the engine's",
-        "honest worst case). Warm min-of-2 per cell, local[32]. exp =",
+        f"honest worst case). Warm min-of-2 per cell, {spark.sparkContext.master}. exp =",
         "log10(t10x / t1x): ≈1 linear, <1 the fixed floor still amortizing,",
         ">1 sustained would be a scale bug.",
         "",
@@ -113,8 +109,7 @@ def main() -> None:
         "|---|---|---|---|",
     ]
     for name in QUERIES_UNDER_TEST:
-        t1 = time_query(QUERIES[name], spark, SF_DIR)
-        t10 = time_query(QUERIES[name], spark, ten_dir)
+        t1, t10 = t1s[name], t10s[name]
         exp = math.log10(t10 / t1)
         lines.append(f"| {name} | {t1:.2f} | {t10:.2f} | {exp:+.2f} |")
         print(lines[-1], flush=True)

@@ -12,8 +12,9 @@ docs/ETL_SCALE_PROOF.md with the two ratios.
 
 Usage: python tools/etl_scale_proof.py [sf01_dir] [work_dir]
 
-Protocol: both engines warm (one untimed run), then min of 2 timed
-runs; run uncontended. The synthesized input lives under work_dir
+Protocol: bench.py's (``bench.measure`` / ``bench.duckdb_times``):
+both engines warm (one untimed run), then min of 2 timed runs; run
+uncontended. The synthesized input lives under work_dir
 (default /tmp/etl_sf1) and is NOT committed — only the measurements.
 """
 
@@ -22,11 +23,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-
-import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
 
 SF01 = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 WORK = sys.argv[2] if len(sys.argv) > 2 else "/tmp/etl_sf1"
@@ -79,39 +79,6 @@ def synthesize(spark) -> None:
     open(os.path.join(WORK, "_DONE"), "w").write("ok")
 
 
-def time_spark(spark, sf_dir: str) -> float:
-    from spark_streaming_kafka_spark.queries import REGISTRY
-
-    fn = REGISTRY["etl_ratings_pipeline"][0]
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t0)
-    return best
-
-
-def time_duck(sf_dir: str) -> float:
-    con = duckdb.connect()
-    for t in ("lineitem", "orders"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet/*.parquet')"
-            if os.path.isdir(f"{sf_dir}/{t}.parquet")
-            and not os.path.isfile(f"{sf_dir}/{t}.parquet")
-            else f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    sql = _etl_sql()
-    con.execute(sql).fetchall()  # warm
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        con.execute(sql).fetchall()
-        best = min(best, time.time() - t0)
-    con.close()
-    return best
-
-
 def main() -> None:
     from spark_streaming_kafka_spark import get_spark
 
@@ -119,10 +86,11 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     synthesize(spark)
 
+    name = "etl_ratings_pipeline"
     results = {}
     for label, d in (("sf0.1", SF01), ("sf1 (10x synth)", WORK)):
-        s = time_spark(spark, d)
-        dk = time_duck(d)
+        s = bench.measure(spark, [name], run=bench.noop_run(spark, d))[name]
+        dk = bench.duckdb_times(d, {name: _etl_sql()})[name]
         results[label] = {
             "spark_s": round(s, 3),
             "duckdb_s": round(dk, 3),
@@ -142,7 +110,7 @@ def main() -> None:
         "docs/ETL_PROFILE.md claimed etl_ratings_pipeline's gap to the",
         "DuckDB proxy is a volume-independent per-stage scheduling floor",
         "that amortizes as data grows. Measured, same pipeline and proxy,",
-        "min-of-2 warm runs, uncontended local[32]:",
+        f"min-of-2 warm runs, uncontended {spark.sparkContext.master}:",
         "",
         "| scale | rows (lineitem) | Spark s | DuckDB s | Spark/DuckDB |",
         "|---|---|---|---|---|",

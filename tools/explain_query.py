@@ -22,15 +22,13 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
 
     from spark_streaming_kafka_spark import get_spark
+    from spark_streaming_kafka_spark.plans.inspect import explain_str
     from spark_streaming_kafka_spark.queries import QUERIES
 
     spark = get_spark("explain-query")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
-        df = QUERIES[name](spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = explain_str(QUERIES[name](spark, SF_DIR), "formatted")
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)

@@ -2,9 +2,9 @@
 and the implied scaling exponent — measured evidence for the question
 the design docs argue qualitatively: what happens at 10× the data?
 
-Method: each headline query runs warm (one unmeasured pass per SF for
-codegen/JIT), then min-of-2 measured passes per SF. For each 10× SF
-step the exponent is log10(t_big / t_small):
+Method: bench.py's protocol (``bench.measure``) once per SF: one
+unmeasured pass for codegen/JIT, then min-of-2 measured passes. For
+each 10× SF step the exponent is log10(t_big / t_small):
 
 - ≈ 0.0 — flat: the query sits at Spark's fixed per-job cost
   (scheduling, stage barriers); data volume is irrelevant at these SFs
@@ -25,20 +25,19 @@ HEADLINE set; --full adds every other oracle-checked registry query)
 
 from __future__ import annotations
 
-import gc
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import HEADLINE, measure, noop_run  # noqa: E402
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "docs", "SCALING.md")
 
 
 def main() -> None:
-    from bench import HEADLINE
     from spark_streaming_kafka_spark import get_spark
     from spark_streaming_kafka_spark.queries import QUERIES
 
@@ -56,24 +55,16 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     timings: dict[str, list[float]] = {n: [] for n in names}
-    for sf in SFS:
-        for n in names:  # warm pass per SF (codegen per plan shape)
-            QUERIES[n](spark, sf).write.format("noop").mode("overwrite").save()
+    for sf in SFS:  # a warm pass per SF (codegen per plan shape)
+        best = measure(spark, names, run=noop_run(spark, sf))
         for n in names:
-            best = float("inf")
-            for _ in range(2):
-                spark.catalog.clearCache()
-                gc.collect()
-                t0 = time.time()
-                QUERIES[n](spark, sf).write.format("noop").mode("overwrite").save()
-                best = min(best, time.time() - t0)
-            timings[n].append(round(best, 3))
+            timings[n].append(round(best[n], 3))
 
     lines = [
         "# Scaling curves (generated by tools/scaling_curve.py)",
         "",
         "Wall clock per query at three scale factors (warm, min-of-2,",
-        "local[32]) and the implied exponent of the LAST 10× step",
+        f"{spark.sparkContext.master}) and the implied exponent of the LAST 10× step",
         "(log10 of the time ratio). ~0 = fixed-cost floor (a cluster",
         "amortizes it); ~1 = linear in data; sustained >1 = scale bug.",
         "Queries under ~0.5 s are floor-dominated — their exponents",

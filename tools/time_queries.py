@@ -1,7 +1,6 @@
-"""Time an arbitrary list of registry queries with the bench.py
-protocol (noop sink, one unmeasured warm-up pass, then min-of-2
-measured passes with clearCache + GC between queries) — for profiling
-work on queries that are in neither committed suite.
+"""Time an arbitrary list of registry queries with bench.py's protocol
+(``bench.measure``) — for profiling work on queries that are in
+neither committed suite.
 
 Usage: python tools/time_queries.py [--json OUT.json] QUERY [QUERY ...]
 
@@ -12,15 +11,13 @@ shape so records are directly comparable.
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+import bench  # noqa: E402
 
 
 def main() -> None:
@@ -35,33 +32,17 @@ def main() -> None:
         raise SystemExit("usage: time_queries.py [--json OUT.json] QUERY ...")
 
     from spark_streaming_kafka_spark import get_spark
-    from spark_streaming_kafka_spark.queries import QUERIES
 
     spark = get_spark("time-queries")
     spark.sparkContext.setLogLevel("ERROR")
-
-    for name in names:  # warm-up: pay codegen/JIT once per plan shape
-        QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-
-    timings: dict[str, float] = {}
-    for _ in range(2):
-        for name in names:
-            spark.catalog.clearCache()
-            gc.collect()
-            spark._jvm.System.gc()
-            t0 = time.time()
-            QUERIES[name](spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            dt = round(time.time() - t0, 3)
-            timings[name] = min(timings.get(name, dt), dt)
+    timings = {n: round(s, 3) for n, s in bench.measure(spark, names).items()}
 
     out = {
         "metric": "ad-hoc query timings",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "sf_dir": SF_DIR,
+        "sf_dir": bench.SF_DIR,
         "loadavg_1m": round(os.getloadavg()[0], 2),
     }
     print(json.dumps(out))
