@@ -439,10 +439,18 @@ def minhash_lsh_pairs(
     )
 
 
-def _band_keys(sigs: DataFrame, id_alias: str, num_perm: int, bands: int) -> DataFrame:
+def _band_keys(
+    sigs: DataFrame,
+    id_alias: str,
+    num_perm: int,
+    bands: int,
+    sig_alias: str | None = None,
+) -> DataFrame:
     """(id, band, key) rows — the LSH banding of a signature table,
     shared by the self-pair and manifest paths. Key format matches
-    :func:`minhash_lsh_pairs` ('_'-joined band slice values)."""
+    :func:`minhash_lsh_pairs` ('_'-joined band slice values).
+    ``sig_alias`` carries the signature along as (id, sig_alias, band,
+    key), so a band match needs no join back to the signature table."""
     rows = num_perm // bands
     band_structs = ", ".join(
         "named_struct('band', {i}, 'key', concat_ws('_', {items}))".format(
@@ -451,10 +459,56 @@ def _band_keys(sigs: DataFrame, id_alias: str, num_perm: int, bands: int) -> Dat
         )
         for i in range(bands)
     )
+    carry = [sig_alias] if sig_alias else []
     return sigs.select(
         F.col("doc_id").alias(id_alias),
+        *[F.col("signature").alias(c) for c in carry],
         F.expr(f"explode(array({band_structs}))").alias("bk"),
-    ).select(id_alias, "bk.band", "bk.key")
+    ).select(id_alias, *carry, "bk.band", "bk.key")
+
+
+def _signature_matches(
+    new_sigs: DataFrame,
+    manifest_sigs: DataFrame,
+    threshold: float,
+    num_perm: int,
+    bands: int,
+) -> DataFrame:
+    """(doc_id, dup_of, est_jaccard): each new signature's best manifest
+    match at estimated Jaccard ≥ ``threshold`` (ties to the smallest
+    ``dup_of``). Both inputs are (doc_id, signature) tables.
+
+    The new side is small by assumption: its band rows, signature
+    carried (bands × num_perm × 8 B per doc, 4 KiB at 16 × 32), are
+    broadcast, and the manifest's band rows stream past them, each
+    carrying its own signature — so the manifest is scanned once and
+    never shuffled, and no candidate list is joined back to a
+    signature table. The estimate (matching-component fraction) runs on
+    every band collision before the only shuffle, the per-doc best
+    pick over matches ≥ ``threshold``; a pair colliding in several
+    bands yields the same estimate each time, so duplicates cannot
+    change the pick."""
+    nb = _band_keys(new_sigs, "doc_id", num_perm, bands, "__sa")
+    ob = _band_keys(manifest_sigs, "dup_of", num_perm, bands, "__sb")
+    est = F.size(
+        F.filter(F.zip_with("__sa", "__sb", lambda x, y: x == y), lambda v: v)
+    ) / F.lit(float(num_perm))
+    # min over (-estimate, dup_of): the highest estimate, then the
+    # smallest historical id — the deterministic tiebreak
+    best = F.min(F.struct((-F.col("est_jaccard")).alias("neg"), "dup_of"))
+    return (
+        F.broadcast(nb)
+        .join(ob, ["band", "key"])
+        .select("doc_id", "dup_of", F.round(est, 6).alias("est_jaccard"))
+        .filter(F.col("est_jaccard") >= threshold)
+        .groupBy("doc_id")
+        .agg(best.alias("__best"))
+        .select(
+            "doc_id",
+            F.col("__best.dup_of").alias("dup_of"),
+            (-F.col("__best.neg")).alias("est_jaccard"),
+        )
+    )
 
 
 def minhash_manifest_matches(
@@ -476,59 +530,32 @@ def minhash_manifest_matches(
     a billion-doc history is ~256 GB parquet, scan-pruned by the band
     join; contrast a text manifest at 100 TB). Pipeline per ingest:
     sign the new batch (one Arrow pass over NEW docs only), band both
-    sides, equi-join band keys for candidates, then estimate Jaccard
-    from the signatures themselves (matching-component fraction — the
-    unbiased MinHash estimator) and keep each new doc's best match
-    ≥ ``threshold`` (ties to the smallest historical id, so results are
-    deterministic and oracle-checkable).
+    sides with each row carrying its signature, equi-join band keys,
+    then estimate Jaccard from the two signatures on the joined row
+    (matching-component fraction — the unbiased MinHash estimator) and
+    keep each new doc's best match ≥ ``threshold`` (ties to the
+    smallest historical id, so results are deterministic and
+    oracle-checkable).
 
     Estimated — not exact — Jaccard is the point: verification against
     text would need the historical bodies. The estimator's error is
     O(1/√num_perm) (±0.088 at 32 perms); raise num_perm where the gate
     feeds deletion rather than review.
 
-    Scale: the new batch is small by assumption (it rides broadcast
-    joins); the manifest contributes one band-key pass (narrow rows)
-    and one signature join-back against band-matched candidates — AQE
-    plans the latter as broadcast when the candidate set is small.
-    After the gate, append ``minhash_signatures(fresh)`` to the
-    manifest — the loop that keeps ingest N+1 as cheap as ingest N
-    (same incremental discipline as curation.manifest_dedup's
-    hash-only manifest; cites reference spark_kafka.py:96-118 batch
-    re-scan pattern this replaces).
+    Scale: the new batch is small by assumption — its band rows are
+    broadcast, the manifest is scanned once and streams past them
+    without a shuffle, and the only shuffle is the per-doc best pick
+    over matching pairs. The signatures are consumed by that one
+    branch, so the new batch is signed once. After the gate, append
+    the kept documents' signatures to the manifest — the loop that
+    keeps ingest N+1 as cheap as ingest N (same incremental discipline
+    as curation.manifest_dedup's hash-only manifest; cites reference
+    spark_kafka.py:96-118 batch re-scan pattern this replaces).
+    ``streaming.manifest_dedup`` runs this loop per micro-batch and
+    reuses the one set of signatures for the gate and the append.
     """
     new_sigs = minhash_signatures(new_docs, num_perm, k, text_col, id_col)
-    nb = _band_keys(new_sigs, "doc_id", num_perm, bands)
-    ob = _band_keys(manifest_sigs, "dup_of", num_perm, bands)
-    cand = (
-        nb.join(ob, ["band", "key"])
-        .select("doc_id", "dup_of")
-        .dropDuplicates(["doc_id", "dup_of"])
-    )
-    sa = new_sigs.select("doc_id", F.col("signature").alias("__sa"))
-    sb = manifest_sigs.select(
-        F.col("doc_id").alias("dup_of"), F.col("signature").alias("__sb")
-    )
-    # cand is bounded (band-collision pairs), broadcast it into the new
-    # side; the manifest join-back is left to AQE (same discipline as
-    # minhash_lsh_pairs' verify joins).
-    est = F.size(
-        F.filter(F.zip_with("__sa", "__sb", lambda x, y: x == y), lambda v: v)
-    ) / F.lit(float(num_perm))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("est_jaccard").desc(), F.col("dup_of").asc()
-    )
-    return (
-        sa.join(F.broadcast(cand), "doc_id")
-        .join(sb, "dup_of")
-        .withColumn("est_jaccard", F.round(est, 6))
-        .filter(F.col("est_jaccard") >= threshold)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("doc_id", "dup_of", "est_jaccard")
-    )
+    return _signature_matches(new_sigs, manifest_sigs, threshold, num_perm, bands)
 
 
 def _bucket_pairs(
@@ -1395,7 +1422,7 @@ def embedding_near_dup_pairs(
 def _gram_pair_scorer(thr: float):
     """pandas scorer for within-group near-dup pairs: normalize the
     group's vectors, one chunked BLAS gram pass, emit (id_a < id_b,
-    cosine ≥ thr). Shared by the sign-LSH bucketed path (per bucket)
+    cosine ≥ thr) — never a self-pair, even for repeated ids. Shared by the sign-LSH bucketed path (per bucket)
     and the exact path (one degenerate bucket). Chunked upper-triangle
     scoring: peak memory is chunk×m doubles, not m×m — an oversized
     group degrades to more gemm calls instead of an executor OOM
@@ -1425,7 +1452,9 @@ def _gram_pair_scorer(thr: float):
             hi = min(lo + chunk, m)
             sims = mat[lo:hi] @ mat.T  # (hi-lo, m)
             ia, ib = np.nonzero(sims >= thr)
-            keep = (ia + lo) < ib  # upper triangle only (a < b)
+            # a < b by id VALUE, not position: rows sharing an id would
+            # otherwise pair with each other as (x, x, cosine)
+            keep = ids[ia + lo] < ids[ib]
             if keep.any():
                 parts.append(
                     pd.DataFrame(

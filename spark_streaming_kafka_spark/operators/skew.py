@@ -20,8 +20,27 @@ never rand().
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+#: a physical-plan node in a tree string: the first word after the tree
+#: markers and an optional whole-stage-codegen tag ("*(2) ")
+_PLAN_NODE = re.compile(r"^[\s:|+-]*(?:\*\(\d+\) )?(\w+)", re.M)
+
+
+def _has_exchange(df: DataFrame) -> bool:
+    """True when ``df``'s physical plan (a cached relation's plan
+    included) shuffles, broadcasts or is adaptive (AQE wraps a plan
+    only for an exchange or a subquery) — read from the plan, nothing
+    executed."""
+    tree = df._jdf.queryExecution().executedPlan().toString()
+    return any(
+        n.endswith("Exchange") or n == "AdaptiveSparkPlan"
+        for n in _PLAN_NODE.findall(tree)
+    )
 
 
 def fan_out(df: DataFrame, per_core: int = 1) -> DataFrame:
@@ -35,6 +54,13 @@ def fan_out(df: DataFrame, per_core: int = 1) -> DataFrame:
     whole stage to one core. The round-robin shuffle this inserts moves
     only the small input, never the exploded intermediate.
 
+    The decision runs no Spark job. A plan that shuffles or broadcasts
+    learns its partition count only by running (AQE executes its query
+    stages to coalesce them, and an uncached input then runs that work
+    again for the real query), so such a plan is repartitioned to the
+    target without asking; a plan of leaf scans and narrow operators
+    knows its count up front and keeps the check.
+
     ``per_core=1`` (one task per core): these stages are CPU-bound with
     uniform per-row cost, so extra waves buy no balance and pay task
     launch/deserialize overhead — 2 tasks/core measured ~20% slower on
@@ -43,6 +69,8 @@ def fan_out(df: DataFrame, per_core: int = 1) -> DataFrame:
     """
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism * per_core
+    if _has_exchange(df):
+        return df.repartition(target)
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

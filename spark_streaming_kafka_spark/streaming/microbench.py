@@ -128,6 +128,9 @@ def stream_manifest_dedup(spark: SparkSession, sf_dir: str) -> None:
 
 
 def stream_sessionization(spark: SparkSession, sf_dir: str) -> None:
+    import time
+
+    from .monitor import ProgressRecorder
     from .sessions import sentinel_sessions_stateful
 
     def build(d: str) -> None:
@@ -157,10 +160,8 @@ def stream_sessionization(spark: SparkSession, sf_dir: str) -> None:
         ).astype(parsed.dtypes.to_dict())
         last = os.path.join(d, f"batch_{_N_BATCHES - 1:03d}.parquet")
         _write_batches(parsed, d, n_batches=_N_BATCHES - 1)
-        import time as _time
-
         closers.to_parquet(last, index=False)
-        os.utime(last, (_time.time() - 3000, _time.time() - 3000))
+        os.utime(last, (time.time() - 3000, time.time() - 3000))
         _PREPARED_ROWS[d] = len(parsed) + len(closers)
 
     src = _prep("sessions", sf_dir, build)
@@ -179,29 +180,31 @@ def stream_sessionization(spark: SparkSession, sf_dir: str) -> None:
         # left" condition (timers keep scheduling empty micro-batches —
         # observed 900+ epochs spinning after the 8 data batches). Run
         # with an immediate processing-time trigger instead and stop
-        # once the source progress shows every input row consumed —
-        # same 8 data micro-batches, deterministic work, bounded run.
-        q = (
-            sentinel_sessions_stateful(parsed)
-            .writeStream.format("noop")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        import time
-
-        deadline = time.time() + 300
-        seen: dict[int, int] = {}
-        while time.time() < deadline:
-            for p in q.recentProgress:
-                seen[p["batchId"]] = sum(
-                    s["numInputRows"] for s in p["sources"]
-                )
-            if sum(seen.values()) >= expected:
-                break
-            time.sleep(0.1)
-        q.stop()
-        assert sum(seen.values()) >= expected, (
+        # once every input row is consumed — same 8 data micro-batches,
+        # deterministic work, bounded run. Rows are counted by a
+        # listener as each batch reports, not read back from the
+        # query's bounded ``recentProgress`` ring, whose idle batches
+        # can evict a data batch between two polls.
+        rec = ProgressRecorder()
+        spark.streams.addListener(rec)
+        try:
+            q = (
+                sentinel_sessions_stateful(parsed)
+                .writeStream.format("noop")
+                .option("checkpointLocation", os.path.join(work, "ckpt"))
+                .trigger(processingTime="0 seconds")
+                .start()
+            )
+            deadline = time.time() + 300
+            while (
+                rec.total_input_rows(q.id) < expected
+                and time.time() < deadline
+            ):
+                time.sleep(0.1)
+            q.stop()
+        finally:
+            spark.streams.removeListener(rec)
+        assert rec.total_input_rows(q.id) >= expected, (
             "sessionization micro-bench did not consume all input"
         )
     finally:

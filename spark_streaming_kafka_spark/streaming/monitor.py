@@ -9,7 +9,8 @@ module wraps ``StreamingQueryListener`` (driver-side callbacks, zero
 cost on the executor path) into:
 
 - :class:`ProgressRecorder` — in-memory ring of recent
-  ``QueryProgress`` summaries (one dict per micro-batch).
+  ``QueryProgress`` summaries (one dict per micro-batch), plus each
+  query's input-row total since the recorder was attached.
 - :func:`falling_behind` — the standard backpressure predicate:
   processing time persistently exceeding the trigger interval means
   the stream is accumulating lag and needs either a bigger cluster,
@@ -34,6 +35,8 @@ class ProgressRecorder(StreamingQueryListener):
 
     def __init__(self, keep: int = 256) -> None:
         self.progress: deque[dict] = deque(maxlen=keep)
+        #: query id -> input rows over every batch seen, evicted or not
+        self.input_rows: dict[str, int] = {}
         self.started: list[str] = []
         self.terminated: list[str] = []
 
@@ -43,9 +46,11 @@ class ProgressRecorder(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:
         p = event.progress
+        qid = str(p.id)
+        self.input_rows[qid] = self.input_rows.get(qid, 0) + (p.numInputRows or 0)
         self.progress.append(
             {
-                "query_id": str(p.id),
+                "query_id": qid,
                 "batch_id": p.batchId,
                 "num_input_rows": p.numInputRows,
                 "trigger_ms": (p.durationMs or {}).get("triggerExecution"),
@@ -63,8 +68,13 @@ class ProgressRecorder(StreamingQueryListener):
     def batches(self) -> list[dict]:
         return list(self.progress)
 
-    def total_input_rows(self) -> int:
-        return sum(b["num_input_rows"] or 0 for b in self.progress)
+    def total_input_rows(self, query_id: str | None = None) -> int:
+        """Input rows of every batch recorded since attaching — of one
+        query (its ``StreamingQuery.id``) or of all. Counted as progress
+        arrives, so ring eviction never loses rows."""
+        if query_id is not None:
+            return self.input_rows.get(str(query_id), 0)
+        return sum(self.input_rows.values())
 
 
 def falling_behind(

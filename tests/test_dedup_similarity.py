@@ -237,6 +237,29 @@ def test_embedding_near_dup_bucketed_path_no_self_join(spark):
     assert got == want  # θ≈0 pairs collide in some rotation w.p. ≈ 1
 
 
+def test_embedding_near_dup_repeated_ids_emit_no_self_pairs(spark):
+    """Rows that share a vec_id are one id, not a pair: neither the
+    exact path nor the bucketed path may emit (x, x, cosine), while
+    pairs between distinct ids are still found (ordered id_a < id_b)."""
+    v = [1.0, 0.0, 0.0, 0.0]
+    w = [0.0, 1.0, 0.0, 0.0]
+    rows = [
+        (7, v), (7, [0.999, 0.001, 0.0, 0.0]),  # repeated id, near-identical
+        (3, v),                                   # distinct id, same vector
+        (9, w), (9, w),                           # repeated id, identical
+    ]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    for exact_below in (10**9, 0):
+        pairs = {
+            (r["id_a"], r["id_b"])
+            for r in dd.embedding_near_dup_pairs(
+                vecs, threshold=0.99, exact_below=exact_below,
+                n_planes=2, n_rotations=2, dim=4,
+            ).collect()
+        }
+        assert pairs == {(3, 7)}, (exact_below, pairs)
+
+
 def test_ivf_kmeans_codebook_recall(spark, emb):
     """IVF with a REAL KMeans codebook (the production path the
     deterministic sample stands in for): k rows per query, and recall

@@ -262,6 +262,134 @@ def test_streaming_incremental_dedup_corrupt_manifest_aborts(spark, tmp_path):
         sink(b, 1)
 
 
+def _dedup_batch_files(tmp_path):
+    """Two single-file parquet batches (file scans, as a stream's
+    source delivers them): batch 1 repeats one batch-0 text exactly and
+    one nearly, next to texts of its own."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    words = [f"w{i}" for i in range(400)]
+
+    def text(seed):
+        return " ".join(words[(seed * 37 + j * 11) % 400] for j in range(30))
+
+    b0 = [(i, text(i)) for i in range(12)] + [(12, text(3))]
+    b1 = (
+        [(100 + i, text(50 + i)) for i in range(12)]
+        + [(200, text(5)), (201, text(7).rsplit(" ", 1)[0] + " zz")]
+    )
+    paths = []
+    for n, rows in enumerate((b0, b1)):
+        path = str(tmp_path / f"batch{n}.parquet")
+        pq.write_table(
+            pa.table({
+                "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+                "text": pa.array([r[1] for r in rows], pa.string()),
+            }),
+            path,
+        )
+        paths.append(path)
+    return paths
+
+
+def test_streaming_incremental_dedup_batch_cost(spark, tmp_path):
+    """A micro-batch costs its own work: batch 1 signs its documents in
+    exactly ONE MinHash (MapInPandas) pass, shared by the band join and
+    the signature manifest's growth; batch 0 reads no Python-made
+    DataFrame (a missing manifest is known from the read); and batch
+    1's job count stays within a bound just over this code's (15 on
+    local[4] with on_kept's collect; the sink that signed twice and
+    probed for emptiness took 33)."""
+    import json
+    import urllib.request
+
+    from spark_streaming_kafka_spark.streaming.manifest_dedup import (
+        incremental_dedup_sink,
+    )
+
+    sc = spark.sparkContext
+    paths = _dedup_batch_files(tmp_path)
+    kept: dict[int, set] = {}
+    sink = incremental_dedup_sink(
+        spark, str(tmp_path / "hashes"), str(tmp_path / "sigs"),
+        lambda df, bid: kept.update({bid: {r["doc_id"] for r in df.collect()}}),
+    )
+    groups = {}
+    for n, path in enumerate(paths):
+        group = f"dedup-cost-{tmp_path.name}-{n}"
+        sc.setJobGroup(group, group)
+        try:
+            sink(spark.read.parquet(path), n)
+        finally:
+            sc.setJobGroup(None, None)
+        groups[n] = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert kept[0] == set(range(12))  # doc 12 repeats doc 3's text
+    assert 200 not in kept[1] and 201 not in kept[1]
+    assert set(range(100, 112)) <= kept[1]
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
+    with urllib.request.urlopen(
+        base + "/sql?details=true&planDescription=true&offset=0&length=100000",
+        timeout=60,
+    ) as r:
+        executions = json.loads(r.read().decode())
+
+    def runs(n):
+        return [
+            ex for ex in executions
+            if groups[n] & set(ex.get("successJobIds", []) + ex.get("failedJobIds", []))
+        ]
+
+    def signing_passes(n):
+        # a MapInPandas node that produced rows ran; a cached one read
+        # back later shows zero
+        return sum(
+            1
+            for ex in runs(n)
+            for node in ex["nodes"]
+            if node["nodeName"] == "MapInPandas"
+            and any(
+                m["name"] == "number of output rows" and m["value"].strip() not in ("", "0")
+                for m in node["metrics"]
+            )
+        )
+
+    assert signing_passes(1) == 1
+    assert signing_passes(0) == 1
+    assert not any("applySchemaToPythonRDD" in ex["planDescription"] for ex in runs(0))
+    assert len(groups[1]) <= 16, len(groups[1])
+
+
+def test_streaming_incremental_dedup_empty_and_all_seen_batches(spark, tmp_path):
+    """An empty batch calls nothing and writes nothing; a batch whose
+    every text is already in the manifest still reports its (empty)
+    kept set and grows no manifest partition."""
+    import os
+
+    from spark_streaming_kafka_spark.streaming.manifest_dedup import (
+        incremental_dedup_sink,
+    )
+
+    hp, sp = str(tmp_path / "hashes"), str(tmp_path / "sigs")
+    calls: list[tuple[int, int]] = []
+    sink = incremental_dedup_sink(
+        spark, hp, sp, lambda df, bid: calls.append((bid, df.count()))
+    )
+    schema = "doc_id long, text string"
+    sink(spark.createDataFrame([], schema), 0)
+    assert calls == [] and not os.path.exists(hp) and not os.path.exists(sp)
+
+    text = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
+    sink(spark.createDataFrame([(1, text)], schema), 1)
+    sink(spark.createDataFrame([(2, text), (3, text)], schema), 2)
+    assert calls == [(1, 1), (2, 0)]
+    for path in (hp, sp):
+        parts = [n for n in os.listdir(path) if not n.startswith((".", "_"))]
+        assert parts == ["batch_id=1"], (path, parts)
+
+
 def test_mean_shift_changepoint_hand_values(spark):
     """r9: the CUSUM statistic peaks at the true level shift; ties and
     single-point keys behave by contract."""

@@ -49,3 +49,40 @@ def test_rendezvous_rejects_duplicate_shards(spark):
     df = spark.createDataFrame([(1,)], "doc_id long")
     with _pytest.raises(ValueError):
         rendezvous_assign(df, "doc_id", ["a", "a"])
+
+
+def test_fan_out_runs_no_job_while_the_plan_is_built(spark, tmp_path):
+    """fan_out decides without executing: on an aggregated input (whose
+    partition count only AQE's run would reveal) it starts no Spark job
+    and repartitions to the target; on a one-file parquet scan it keeps
+    the partition-count check — up to the target, and a no-op on a leaf
+    that already has that many splits."""
+    from pyspark.sql import functions as F
+
+    from spark_streaming_kafka_spark.operators.skew import fan_out
+
+    sc = spark.sparkContext
+    target = sc.defaultParallelism
+    one = str(tmp_path / "one")
+    spark.range(200).selectExpr("id", "id % 7 AS k").coalesce(1).write.parquet(one)
+
+    def jobs_during(build):
+        group = f"fan-out-{tmp_path.name}-{id(build)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = build()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    agg = spark.read.parquet(one).groupBy("k").agg(F.count("*").alias("n"))
+    out, n_jobs = jobs_during(lambda: fan_out(agg))
+    assert n_jobs == 0
+    assert out.rdd.getNumPartitions() == target
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, agg.collect()))
+
+    scan = spark.read.parquet(one)
+    out, n_jobs = jobs_during(lambda: fan_out(scan))
+    assert n_jobs == 0 and out.rdd.getNumPartitions() == target
+    wide = spark.range(0, 200, 1, target + 2)  # a leaf with more splits
+    assert fan_out(wide).rdd.getNumPartitions() == target + 2
