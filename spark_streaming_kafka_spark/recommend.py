@@ -28,15 +28,21 @@ Mechanical deltas from the reference, by design:
   is not sustainable at its own 1 s interval; cadence is the caller's
   policy knob (see streaming/recommend_stream.py).
 
-Scale: ALS itself is Spark-distributed (block factorization). The
+Scale: ALS itself is Spark-distributed (block factorization), with the
+reference's block rule (``mllib`` ``ALS.train(blocks=-1)`` resolves to
+``max(defaultParallelism, partitions / 2)`` user and item blocks;
+``pyspark.ml``'s fixed 10×10 only adds tasks on a small box). The
 history is an engine-owned localCheckpoint snapshot from construction
 on, so no batch re-analyses the caller's plan (a ``createDataFrame``
 history is a LocalRelation holding every row, which every later plan
-would otherwise carry and re-analyse). The
-ratings union grows unboundedly — ``add_ratings`` re-snapshots it every
-``_CHECKPOINT_EVERY`` batches so the plan doesn't deepen linearly over
-a long-lived stream, coalesced back to the construction snapshot's
-partition count so tasks per batch don't grow either.
+would otherwise carry and re-analyse), plus ONE single-partition delta
+holding everything added since the last checkpoint: each add folds the
+batch into the delta, so the history stays at the snapshot's partitions
++ 1 and tasks per batch stay flat. Every ``_CHECKPOINT_EVERY`` adds the
+delta is folded into a new snapshot, coalesced back to the construction
+snapshot's partition count. Rating counts are running ``(n, sum)`` per
+song, merged with each batch's rows in one task; ``avg_rating`` is
+derived when read, so no batch recounts the history.
 """
 
 from __future__ import annotations
@@ -46,15 +52,14 @@ from pyspark.ml.recommendation import ALS, ALSModel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.relational import (
-    anti_join,
-    counts_and_averages,
-    semi_join,
-    top_k,
-    union_ratings,
-)
+from .operators.relational import anti_join, semi_join, top_k, union_ratings
 
 _CHECKPOINT_EVERY = 10
+
+
+def _rdd_id(ckpt: DataFrame) -> int:
+    """Id of the internal RDD behind a localCheckpoint DataFrame."""
+    return ckpt._jdf.queryExecution().logical().rdd().id()
 
 
 class RecommendationEngine:
@@ -74,9 +79,9 @@ class RecommendationEngine:
         """``ratings``: (user_id int, song_id int, rating double);
         ``metadata``: song catalog with at least (new_song_ID, title).
 
-        ``ratings`` is materialized once into an engine-owned snapshot;
-        the caller's DataFrame (and any cache on it) is not touched
-        again."""
+        ``ratings`` is materialized once into an engine-owned snapshot
+        (and its per-song counts); the caller's DataFrame (and any cache
+        on it) is not touched again."""
         self.spark = spark
         self.metadata = metadata.cache() if metadata is not None else None
         self.rank = rank
@@ -86,42 +91,77 @@ class RecommendationEngine:
         self.min_ratings = min_ratings
         self.model: ALSModel | None = None
         self._adds_since_checkpoint = 0
+        #: ids of every checkpoint RDD the engine owns (snapshot, delta,
+        #: counts): exactly the RDDs it keeps persisted
         self._ckpt_rdd_ids: set[int] = set()
-        self.ratings = self._snapshot(ratings)
-        self._history_partitions = self.ratings.rdd.getNumPartitions()
-        self._refresh_counts()
+        self._snap = self._checkpoint(ratings)
+        self._delta: DataFrame | None = None
+        self.ratings = self._snap
+        self._history_partitions = self._snap.rdd.getNumPartitions()
+        self._counts = self._checkpoint(
+            self._snap.groupBy("song_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_ratings"),
+                F.sum("rating").alias("rating_sum"),
+            )
+            .coalesce(1)
+        )
 
-    def _snapshot(self, df: DataFrame) -> DataFrame:
-        """``df`` materialized as the engine's history snapshot (an eager
-        localCheckpoint: a ``LogicalRDD`` plan), freeing the previous
-        snapshot's blocks by RDD id — ``DataFrame.unpersist()`` does not
-        release a localCheckpoint's internal RDD (see operators/dedup.py::
-        _unpersist_rdds)."""
+    def _checkpoint(self, df: DataFrame, replaces: DataFrame | None = None) -> DataFrame:
+        """``df`` materialized as an engine-owned eager localCheckpoint (a
+        ``LogicalRDD`` plan), after which ``replaces`` (an earlier
+        checkpoint the result supersedes) is freed."""
+        ckpt = df.localCheckpoint(eager=True)
+        self._ckpt_rdd_ids.add(_rdd_id(ckpt))
+        if replaces is not None:
+            self._free(replaces)
+        return ckpt
+
+    def _free(self, ckpt: DataFrame) -> None:
+        """Free an engine checkpoint's blocks by RDD id —
+        ``DataFrame.unpersist()`` does not release a localCheckpoint's
+        internal RDD (see operators/dedup.py::_unpersist_rdds)."""
         from .operators.dedup import _unpersist_rdds
 
-        snap = df.localCheckpoint(eager=True)
-        _unpersist_rdds(self.spark.sparkContext, self._ckpt_rdd_ids)
-        self._ckpt_rdd_ids = {snap._jdf.queryExecution().logical().rdd().id()}
-        return snap
+        rid = _rdd_id(ckpt)
+        _unpersist_rdds(self.spark.sparkContext, {rid})
+        self._ckpt_rdd_ids.discard(rid)
 
     def unpersist(self) -> None:
         """Free everything the engine keeps resident: the history
-        snapshot, the cached union on top of it and the rating counts."""
+        snapshot and delta and the rating counts."""
         from .operators.dedup import _unpersist_rdds
 
-        self.ratings.unpersist()
-        self.rating_counts.unpersist()
         _unpersist_rdds(self.spark.sparkContext, self._ckpt_rdd_ids)
         self._ckpt_rdd_ids = set()
 
     # -- reference: engine.py:20-28 (__count_and_average_ratings) -------
-    def _refresh_counts(self) -> None:
-        self.rating_counts = counts_and_averages(
-            self.ratings, "song_id", "rating"
-        ).cache()
+    @property
+    def rating_counts(self) -> DataFrame:
+        """(song_id, n_ratings, avg_rating) over the whole history, read
+        from the running per-song ``(n, sum)``: the same rows as
+        ``counts_and_averages(self.ratings, "song_id", "rating")``. The
+        average is ``sum / n`` in doubles, as Spark's ``avg`` computes
+        it, so it is bit-equal whenever the sum is exact — any ratings on
+        a half-unit grid, such as the 1–5 stars of the ETL and the
+        reference. For arbitrary doubles the running sum adds in batch
+        order, not the recount's partition order, and may differ in the
+        last place."""
+        return self._counts.select(
+            "song_id",
+            "n_ratings",
+            (F.col("rating_sum") / F.col("n_ratings")).alias("avg_rating"),
+        )
 
     # -- reference: engine.py:30-37 (__train_model) ----------------------
     def retrain(self) -> None:
+        """Refit ALS on the whole history. Blocks follow the reference's
+        ``mllib`` rule (``blocks=-1``): ``max(defaultParallelism,
+        partitions // 2)``."""
+        blocks = max(
+            self.spark.sparkContext.defaultParallelism,
+            self.ratings.rdd.getNumPartitions() // 2,
+        )
         als = ALS(
             rank=self.rank,
             maxIter=self.max_iter,
@@ -131,6 +171,8 @@ class RecommendationEngine:
             itemCol="song_id",
             ratingCol="rating",
             coldStartStrategy="drop",
+            numUserBlocks=blocks,
+            numItemBlocks=blocks,
         )
         self.model = als.fit(self.ratings)
 
@@ -139,26 +181,53 @@ class RecommendationEngine:
         """Union new ratings into history (U1). The reference retrains on
         every add; here it's a flag so streaming callers set cadence.
 
-        Storage is strictly bounded on a long-lived stream: one history
-        snapshot (the construction snapshot, later each checkpoint
-        cycle's) plus at most one cached union on top of it stay
-        resident. Each add caches the new union and frees the previous
-        one. On checkpoint cycles the union is NOT separately cached
-        (localCheckpoint materializes it) and the previous snapshot's
-        blocks are freed by RDD id (see ``_snapshot``)."""
-        old = self.ratings
-        union = union_ratings(self.ratings, new_ratings)
+        The cost of an add is its own rows', not the history's: between
+        checkpoints it runs two one-task jobs whatever the history size.
+        - The batch is folded into the single-partition delta (the
+          history is the snapshot ∪ the delta), so the history stays at
+          the snapshot's partitions + 1. Every ``_CHECKPOINT_EVERY``-th
+          add folds snapshot and delta into a new snapshot instead,
+          coalesced to the construction snapshot's partition count.
+        - The running ``(n, sum)`` per song is merged with the batch's
+          rows (see ``rating_counts``).
+
+        Storage is strictly bounded on a long-lived stream: one snapshot,
+        at most one delta and one counts table stay resident, each an
+        eager localCheckpoint that frees the one it replaces. ``new_ratings``
+        is read once per job and not retained."""
+        new = new_ratings.select("user_id", "song_id", "rating")
         self._adds_since_checkpoint += 1
+        pending = new if self._delta is None else union_ratings(self._delta, new)
         if self._adds_since_checkpoint >= _CHECKPOINT_EVERY:
-            # Truncate lineage: after N unions the plan is N levels deep
-            # and N batches' partitions wide; the snapshot resets both.
-            self.ratings = self._snapshot(union.coalesce(self._history_partitions))
+            # Truncate lineage and width: the snapshot absorbs the delta.
+            self._snap = self._checkpoint(
+                union_ratings(self._snap, pending).coalesce(self._history_partitions),
+                replaces=self._snap,
+            )
+            if self._delta is not None:
+                self._free(self._delta)
+            self._delta = None
             self._adds_since_checkpoint = 0
+            self.ratings = self._snap
         else:
-            self.ratings = union.cache()
-        old.unpersist()
-        self.rating_counts.unpersist()
-        self._refresh_counts()
+            self._delta = self._checkpoint(pending.coalesce(1), replaces=self._delta)
+            self.ratings = union_ratings(self._snap, self._delta)
+        batch_sums = new.select(
+            "song_id",
+            F.lit(1).cast("long").alias("n_ratings"),
+            F.col("rating").alias("rating_sum"),
+        )
+        # One partition in, so the aggregate needs no shuffle.
+        self._counts = self._checkpoint(
+            self._counts.unionByName(batch_sums)
+            .coalesce(1)
+            .groupBy("song_id")
+            .agg(
+                F.sum("n_ratings").alias("n_ratings"),
+                F.sum("rating_sum").alias("rating_sum"),
+            ),
+            replaces=self._counts,
+        )
         if retrain:
             self.retrain()
 

@@ -52,23 +52,47 @@ def build_recommend_pipeline(
     """E1+E2 unified: Kafka in → foreachBatch {ingest → cadenced retrain
     → top-k for batch users} → Kafka out (+ any extra sinks: jdbc/redis/
     mongo writers from sources.sinks), all executor-side."""
-    from ..sources.kafka import kafka_batch_write
-
-    def fan_out(recs: DataFrame, batch_id: int) -> None:
-        records = to_kafka_records(
-            recs, recs["user_id"], ["song_id", "predicted_rating", "num_ratings"]
-        )
-        kafka_batch_write(records, bootstrap_servers, out_topic)
-        for sink in extra_sinks or []:
-            sink(recs, batch_id)
-
     recommender = StreamingRecommender(
-        engine, retrain_every=retrain_every, top_k=top_k, sink=fan_out
+        engine,
+        retrain_every=retrain_every,
+        top_k=top_k,
+        sink=_recommend_sinks(bootstrap_servers, out_topic, extra_sinks),
     )
     stream = parsed_rating_stream(spark, bootstrap_servers, in_topic)
     return recommender.writer(stream, trigger_seconds).option(
         "checkpointLocation", checkpoint_dir
     )
+
+
+def _recommend_sinks(
+    bootstrap_servers: str,
+    out_topic: str,
+    extra_sinks: list[Callable[[DataFrame, int], None]] | None,
+) -> Callable[[DataFrame, int], None]:
+    """The E2 fan-out: each batch's recommendations to Kafka, then to
+    every extra sink. With more than one sink the recommendations are
+    cached, so the serve plan runs once per batch (the first write fills
+    the cache, the others read it), and the cache is dropped after the
+    last sink."""
+    from ..sources.kafka import kafka_batch_write
+
+    sinks = list(extra_sinks or [])
+
+    def fan_out(recs: DataFrame, batch_id: int) -> None:
+        if sinks:
+            recs = recs.cache()
+        try:
+            records = to_kafka_records(
+                recs, recs["user_id"], ["song_id", "predicted_rating", "num_ratings"]
+            )
+            kafka_batch_write(records, bootstrap_servers, out_topic)
+            for sink in sinks:
+                sink(recs, batch_id)
+        finally:
+            if sinks:
+                recs.unpersist()
+
+    return fan_out
 
 
 def build_wordcount_pipeline(

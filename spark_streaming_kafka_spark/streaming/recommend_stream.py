@@ -11,7 +11,9 @@ Per micro-batch (foreachBatch):
 
 The reference's four driver collects per batch (SURVEY.md §3 E1) are
 gone: foreachBatch hands the executor-resident batch DataFrame straight
-into DataFrame algebra.
+into DataFrame algebra. The batch is read from its source ONCE: the
+empty-batch guard materializes it as a one-partition local checkpoint,
+and the ingest and the serve's user set both read that copy.
 """
 
 from __future__ import annotations
@@ -22,7 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
-from ..recommend import RecommendationEngine
+from ..operators.dedup import _unpersist_rdds
+from ..recommend import RecommendationEngine, _rdd_id
 
 
 class StreamingRecommender:
@@ -45,23 +48,33 @@ class StreamingRecommender:
         self.top_k = top_k
         self.sink = sink
         self._batches_seen = 0
+        self._batch: DataFrame | None = None
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> DataFrame | None:
         """foreachBatch body. ``batch_df``: (user_id, song_id, rating).
-        Returns the recommendations served (None on empty batch)."""
-        if batch_df.isEmpty():  # X2's empty-batch guard, without collect
+        Returns the recommendations served (None on empty batch).
+
+        ``batch_df`` is read once, into a one-partition localCheckpoint
+        that the emptiness check fills (X2's empty-batch guard, without
+        collect); ``add_ratings`` and the serve's user set read that copy.
+        The copy is freed when the next batch arrives, so the returned
+        DataFrame stays readable until then."""
+        if self._batch is not None:
+            _unpersist_rdds(self.engine.spark.sparkContext, {_rdd_id(self._batch)})
+        batch = self._batch = (
+            batch_df.select("user_id", "song_id", "rating")
+            .coalesce(1)
+            .localCheckpoint(eager=False)
+        )
+        if batch.isEmpty():
             return None
         self._batches_seen += 1
         retrain = (self._batches_seen % self.retrain_every) == 0 or self.engine.model is None
-        self.engine.add_ratings(
-            batch_df.select("user_id", "song_id", "rating"), retrain=retrain
-        )
+        self.engine.add_ratings(batch, retrain=retrain)
         # One serve plan for the whole batch — no per-user driver loop
         # (a batch with 10k distinct users is one job, not 10k).
-        recs = self.engine.get_top_ratings_for_users(
-            batch_df.select("user_id"), self.top_k
-        )
-        if recs is not None and self.sink is not None:
+        recs = self.engine.get_top_ratings_for_users(batch.select("user_id"), self.top_k)
+        if self.sink is not None:
             self.sink(recs, batch_id)
         return recs
 

@@ -131,19 +131,86 @@ def test_history_is_engine_owned_snapshot(spark, ratings):
     eng.unpersist()
 
 
+_SCHEMA = "user_id int, song_id int, rating double"
+
+
 def test_checkpoint_cycle_restores_partition_count(spark, ratings):
-    """Each add unions the batch's partitions into the history; the
-    every-10 checkpoint coalesces back to the construction snapshot's
-    count, so tasks per batch do not grow for the life of a stream."""
+    """Each add folds its batch into ONE single-partition delta whatever
+    the batch's own partitioning, so between checkpoints the history is
+    the snapshot's partitions + 1; the every-10 checkpoint folds the
+    delta into a new snapshot coalesced back to the construction
+    snapshot's count, so tasks per batch do not grow for the life of a
+    stream."""
     eng = RecommendationEngine(spark, ratings, min_ratings=1)
     n0 = eng.ratings.rdd.getNumPartitions()
-    new = spark.createDataFrame(
-        [(999, 1, 5.0)], "user_id int, song_id int, rating double"
-    )
-    for _ in range(10):
-        eng.add_ratings(new, retrain=False)
-    assert eng.ratings.rdd.getNumPartitions() == n0
-    assert eng.ratings.count() == ratings.count() + 10
+    for i in range(1, 11):
+        batch = spark.createDataFrame(
+            [(900 + i, s, 3.0) for s in range(6)], _SCHEMA
+        ).repartition(3)
+        eng.add_ratings(batch, retrain=False)
+        assert eng.ratings.rdd.getNumPartitions() == (n0 if i == 10 else n0 + 1), i
+    assert eng.ratings.count() == ratings.count() + 60
+    eng.unpersist()
+
+
+def test_running_counts_match_full_recount(spark, ratings):
+    """The running (n, sum) per song gives the same rows as recounting
+    the whole history (``counts_and_averages``), bit for bit, through a
+    checkpoint cycle, with integer and half-integer ratings and songs
+    the history has not seen; and reading them is one job of one task,
+    not a recount over the history's partitions."""
+    from spark_streaming_kafka_spark.operators.relational import counts_and_averages
+
+    eng = RecommendationEngine(spark, ratings, min_ratings=1)
+    sc = spark.sparkContext
+    for i in range(12):
+        batch = spark.createDataFrame(
+            [(700 + i, (i * 7 + j) % 45, 1.0 + (i + j) % 9 * 0.5) for j in range(8)],
+            _SCHEMA,
+        )
+        eng.add_ratings(batch, retrain=False)
+        group = f"running-counts-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            got = sorted(eng.rating_counts.collect())
+        finally:
+            sc.setJobGroup(None, None)
+        want = sorted(counts_and_averages(eng.ratings, "song_id", "rating").collect())
+        assert got == want, i
+        st = sc.statusTracker()
+        jobs = st.getJobIdsForGroup(group)
+        tasks = sum(
+            st.getStageInfo(s).numCompletedTasks
+            for j in jobs
+            for s in st.getJobInfo(j).stageIds
+        )
+        assert (len(jobs), tasks) == (1, 1), i
+    eng.unpersist()
+
+
+def test_retrain_blocks_follow_reference_rule(spark, ratings, monkeypatch):
+    """ALS is fitted with the reference's ``mllib`` block rule
+    (``ALS.train(blocks=-1)``): max(defaultParallelism, partitions // 2)
+    user and item blocks, not ``pyspark.ml``'s fixed 10."""
+    from spark_streaming_kafka_spark import recommend
+
+    seen = []
+    fit = recommend.ALS.fit
+
+    def spy(als, dataset, params=None):
+        seen.append(
+            (als.getNumUserBlocks(), als.getNumItemBlocks(), dataset.rdd.getNumPartitions())
+        )
+        return fit(als, dataset, params)
+
+    monkeypatch.setattr(recommend.ALS, "fit", spy)
+    eng = RecommendationEngine(spark, ratings.repartition(24), max_iter=2, min_ratings=1)
+    eng.retrain()
+    eng.add_ratings(spark.createDataFrame([(5000, 1, 4.0)], _SCHEMA), retrain=True)
+    dp = spark.sparkContext.defaultParallelism
+    assert [s[2] for s in seen] == [24, 25]
+    for users, items, parts in seen:
+        assert users == items == max(dp, parts // 2)
     eng.unpersist()
 
 
@@ -266,9 +333,10 @@ def test_add_ratings_bounds_persisted_storage(spark, tables):
     sc = spark.sparkContext
     before = _persistent_rdd_ids(sc)
     eng = RecommendationEngine(spark, ratings, None)
-    # the construction snapshot is the one RDD the engine persists
+    # the construction snapshot and its per-song counts are the RDDs the
+    # engine persists
     assert _persistent_rdd_ids(sc) - before == eng._ckpt_rdd_ids
-    assert len(eng._ckpt_rdd_ids) == 1
+    assert len(eng._ckpt_rdd_ids) == 2
     new = spark.createDataFrame(
         [(999, 1, 5.0)], "user_id int, song_id int, rating double"
     )
@@ -276,6 +344,7 @@ def test_add_ratings_bounds_persisted_storage(spark, tables):
         eng.add_ratings(new, retrain=False)
     after = _persistent_rdd_ids(sc)
     assert len(after - before) <= 4  # bounded, not ~2 per cycle
+    assert after - before == eng._ckpt_rdd_ids  # snapshot, delta, counts
 
     eng.unpersist()
     assert not _persistent_rdd_ids(sc) - before

@@ -112,14 +112,18 @@ def test_foreach_batch_pipeline(spark):
         q.stop()
 
 
-def test_batch_serving_jobs_invariant_in_user_count(spark):
-    """The round-1 scale-killer: serving launched one Spark job PER
-    distinct user in the batch. Invariant now: job count for a
-    12-user micro-batch equals job count for a 2-user one."""
-    from spark_streaming_kafka_spark.recommend import RecommendationEngine
-    from spark_streaming_kafka_spark.streaming.recommend_stream import (
-        StreamingRecommender,
+def _completed_tasks(sc, group: str) -> int:
+    st = sc.statusTracker()
+    return sum(
+        st.getStageInfo(s).numCompletedTasks
+        for j in st.getJobIdsForGroup(group)
+        for s in st.getJobInfo(j).stageIds
+        if st.getStageInfo(s) is not None
     )
+
+
+def _trained_engine(spark):
+    from spark_streaming_kafka_spark.recommend import RecommendationEngine
 
     rows = [
         (u, s, 2.0 + (u * 3 + s) % 4)
@@ -130,6 +134,18 @@ def test_batch_serving_jobs_invariant_in_user_count(spark):
     ratings = spark.createDataFrame(rows, "user_id int, song_id int, rating double")
     eng = RecommendationEngine(spark, ratings, rank=4, max_iter=3, min_ratings=1)
     eng.retrain()
+    return eng
+
+
+def test_batch_serving_jobs_invariant_in_user_count(spark):
+    """The round-1 scale-killer: serving launched one Spark job PER
+    distinct user in the batch. Invariant now: job count for a
+    12-user micro-batch equals job count for a 2-user one."""
+    from spark_streaming_kafka_spark.streaming.recommend_stream import (
+        StreamingRecommender,
+    )
+
+    eng = _trained_engine(spark)
     rec = StreamingRecommender(eng, retrain_every=1000, top_k=3)
     sc = spark.sparkContext
 
@@ -150,6 +166,93 @@ def test_batch_serving_jobs_invariant_in_user_count(spark):
     jobs_small = jobs_for_batch(2)
     jobs_large = jobs_for_batch(12)
     assert jobs_large <= jobs_small + 1  # independent of distinct-user count
+
+
+def test_process_batch_reads_batch_once_and_holds_tasks_flat(spark):
+    """A cycle costs its own batch's work: the batch source is read once
+    (the emptiness check, the ingest and the serve's user set share one
+    copy) and, over 8 non-retrain cycles of multi-partition batches, the
+    tasks per cycle do not grow with the history."""
+    from spark_streaming_kafka_spark.streaming.recommend_stream import (
+        StreamingRecommender,
+    )
+
+    eng = _trained_engine(spark)
+    served = []
+    rec = StreamingRecommender(
+        eng, retrain_every=1000, top_k=3, sink=lambda recs, b: served.append(recs.count())
+    )
+    sc = spark.sparkContext
+    reads = sc.accumulator(0)
+
+    def read(u):
+        reads.add(1)
+        return u
+
+    counted = F.udf(read, "int").asNondeterministic()
+    tasks = []
+    for b in range(1, 9):
+        batch = spark.createDataFrame(
+            [(u, (u + b) % 20, 3.0) for u in range(10)],
+            "user_id int, song_id int, rating double",
+        ).repartition(3)
+        group = f"flat-cycle-{b}"
+        sc.setJobGroup(group, group)
+        try:
+            before = reads.value
+            rec.process_batch(batch.withColumn("user_id", counted("user_id")), b)
+        finally:
+            sc.setJobGroup(None, None)
+        assert reads.value - before == 10, b
+        tasks.append(_completed_tasks(sc, group))
+    assert len(served) == 8 and all(served)
+    assert tasks[7] <= tasks[1], tasks
+    eng.unpersist()
+
+
+def test_recommend_fan_out_runs_serve_plan_once(spark, monkeypatch):
+    """E2's fan-out (Kafka + extra sinks) executes the serve plan once
+    per batch, not once per sink: the user-factor scan runs once."""
+    from spark_streaming_kafka_spark.sources import kafka
+    from spark_streaming_kafka_spark.streaming.pipelines import _recommend_sinks
+
+    written = []
+    monkeypatch.setattr(
+        kafka, "kafka_batch_write", lambda df, servers, topic: written.append(df.count())
+    )
+    eng = _trained_engine(spark)
+    model = eng.model
+    n_users = model.userFactors.count()
+    sc = spark.sparkContext
+    scans = sc.accumulator(0)
+
+    def scan(i):
+        scans.add(1)
+        return i
+
+    class CountingModel:
+        """The trained model, with every user-factor row read counted."""
+
+        rank = model.rank
+        userFactors = model.userFactors.withColumn(
+            "id", F.udf(scan, "int").asNondeterministic()("id")
+        )
+        itemFactors = model.itemFactors
+
+    eng.model = CountingModel()
+    got: list[list[int]] = [[], []]
+    fan_out = _recommend_sinks(
+        "localhost:9092",
+        "music_test",
+        [lambda recs, b: got[0].append(recs.count()), lambda recs, b: got[1].append(recs.count())],
+    )
+    users = spark.createDataFrame([(3,), (5,)], "user_id int")
+    for b in range(2):
+        before = scans.value
+        fan_out(eng.get_top_ratings_for_users(users, k=3), b)
+        assert scans.value - before == n_users, b
+    assert written == got[0] == got[1] == [6, 6]
+    eng.unpersist()
 
 
 def test_flush_complete_sessions_batch_semantics(spark):

@@ -118,3 +118,32 @@ def test_microbench_sources_reused_then_removed(monkeypatch, tmp_path):
     assert builds == [first]
     microbench._remove_prepared()
     assert not os.path.exists(first)
+
+
+def _load_tool(name: str):
+    path = REPO / "tools" / f"{name}.py"
+    spec = importlib.util.spec_from_file_location(f"tool_{name}", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_stage_profile_lists_build_stages_apart():
+    """An iterative query's build runs jobs: its table row reports those
+    stages and their executor time in ``build_stages``, and a job-free
+    build reads ``0 (0.00 s)``; the cpu column covers both phases."""
+    sp = _load_tool("stage_profile")
+
+    def stage(i: int, ms: int) -> dict:
+        return {"stageId": i, "executorRunTime": ms, "numCompleteTasks": 1}
+
+    prof = {
+        "dedup_clusters": (2.9, 0.5, [stage(1, 1500), stage(2, 750)], [stage(3, 250)]),
+        "word_count": (0.1, 0.4, [], [stage(4, 1000)]),
+    }
+    lines = sp.markdown_table(prof, ["dedup_clusters", "word_count"], cores=4)
+    rows = {ln.split(" | ")[0].lstrip("| "): ln for ln in lines if ln.startswith("| ")}
+    assert rows["query"].split(" | ")[2] == "build_stages"
+    assert rows["dedup_clusters"] == "| dedup_clusters | 2.900 | 2 (2.25 s) | 0.500 | 2.50 | 0.625 |"
+    assert rows["word_count"] == "| word_count | 0.100 | 0 (0.00 s) | 0.400 | 1.00 | 0.250 |"
+    assert rows["**total**"].split(" | ")[2] == "**2**"

@@ -9,12 +9,19 @@ existing directory is the SF dir (default ``bench.SF_DIR``).
 
 Runs ``bench.measure`` with one measured pass: the warm pass pays
 codegen/JIT, then each query's measured run records
-- **build** — driver-side plan construction (py4j/Python, before any job);
+- **build** — the wall clock of building the DataFrame: driver-side
+  plan construction, plus any Spark jobs the build itself runs (an
+  iterative query such as ``dedup_clusters`` runs its component loop
+  while it builds);
+- **build_stages** — the stages those build-time jobs ran (found by
+  their own job group) and their executor time, listed apart from the
+  action's;
 - **exec** — the action's wall clock (stages + scheduling + AQE
   re-planning);
-- per stage, from the Spark UI REST API delta over the run: executor
-  run time (summed across tasks — divide by cores for a wall-clock
-  floor), task count, shuffle read/write volume and input bytes.
+- per stage, from the Spark UI REST API delta over the run: the phase
+  (build or exec), executor run time (summed across tasks — divide by
+  cores for a wall-clock floor), task count, shuffle read/write volume
+  and input bytes.
 
 This is how the repo's perf work is grounded: a query that is "slow"
 from scheduling floor (many small barrier stages) profiles completely
@@ -55,54 +62,64 @@ def main() -> None:
     ui = spark.sparkContext.uiWebUrl
     app = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications"))[0]["id"]
 
-    def stages() -> list[dict]:
-        return json.load(
-            urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{app}/stages?status=complete"
-            )
-        )
+    def rest(path: str) -> list[dict]:
+        return json.load(urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/{path}"))
 
-    #: name -> (build s, exec s, the run's stages); the measured run
-    #: overwrites the warm one
-    prof: dict[str, tuple[float, float, list[dict]]] = {}
+    sc = spark.sparkContext
+    #: name -> (build s, exec s, build-time stages, action stages); the
+    #: measured run overwrites the warm one
+    prof: dict[str, tuple[float, float, list[dict], list[dict]]] = {}
 
     def run(name: str) -> None:
-        before = {s["stageId"] for s in stages()}
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-        t1 = time.perf_counter()
+        before = {s["stageId"] for s in rest("stages?status=complete")}
+        group = f"stage-profile-build-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            t0 = time.perf_counter()
+            df = QUERIES[name](spark, sf_dir)
+            t1 = time.perf_counter()
+        finally:
+            sc.setJobGroup(None, None)
         df.write.format("noop").mode("overwrite").save()
         t2 = time.perf_counter()
-        rows = [s for s in stages() if s["stageId"] not in before]
-        prof[name] = (t1 - t0, t2 - t1, sorted(rows, key=lambda s: s["stageId"]))
+        built = {i for j in rest("jobs") if j.get("jobGroup") == group for i in j["stageIds"]}
+        rows = sorted(
+            (s for s in rest("stages?status=complete") if s["stageId"] not in before),
+            key=lambda s: s["stageId"],
+        )
+        prof[name] = (
+            t1 - t0,
+            t2 - t1,
+            [s for s in rows if s["stageId"] in built],
+            [s for s in rows if s["stageId"] not in built],
+        )
 
     bench.measure(spark, names, passes=1, run=run)
 
-    cores = spark.sparkContext.defaultParallelism
-    cpu: dict[str, float] = {}
+    cores = sc.defaultParallelism
     for name in names:
-        build, execu, rows = prof[name]
+        build, execu, built, ran = prof[name]
         print(
             f"{name}: wall {build + execu:.3f}s (build {build:.3f} exec "
-            f"{execu:.3f}) over {len(rows)} stages ({cores} cores)"
+            f"{execu:.3f}) over {len(built) + len(ran)} stages ({cores} cores); "
+            f"build_stages {build_stages_cell(built)}"
         )
         print(
-            f"{'stage':>5} {'tasks':>5} {'cpu_s':>8} {'cpu/core':>8} "
+            f"{'stage':>5} {'phase':>5} {'tasks':>5} {'cpu_s':>8} {'cpu/core':>8} "
             f"{'shuf_r':>9} {'shuf_w':>9} {'input':>10}"
         )
-        tot_cpu = 0.0
-        for s in rows:
-            c = s.get("executorRunTime", 0) / 1000.0
-            tot_cpu += c
-            print(
-                f"{s['stageId']:>5} {s['numCompleteTasks']:>5} {c:>8.2f} "
-                f"{c / cores:>8.3f} "
-                f"{s.get('shuffleReadBytes', 0):>9} "
-                f"{s.get('shuffleWriteBytes', 0):>9} "
-                f"{s.get('inputBytes', 0):>10}"
-            )
-        cpu[name] = tot_cpu
-        barrier_floor = len(rows) * 0.25
+        for phase, group_rows in (("build", built), ("exec", ran)):
+            for s in group_rows:
+                c = s.get("executorRunTime", 0) / 1000.0
+                print(
+                    f"{s['stageId']:>5} {phase:>5} {s['numCompleteTasks']:>5} {c:>8.2f} "
+                    f"{c / cores:>8.3f} "
+                    f"{s.get('shuffleReadBytes', 0):>9} "
+                    f"{s.get('shuffleWriteBytes', 0):>9} "
+                    f"{s.get('inputBytes', 0):>10}"
+                )
+        tot_cpu = executor_s(built) + executor_s(ran)
+        barrier_floor = (len(built) + len(ran)) * 0.25
         print(
             f"total cpu {tot_cpu:.2f}s (= {tot_cpu / cores:.3f}s/core); "
             f"~{barrier_floor:.1f}s stage-barrier floor at 0.25s/stage"
@@ -115,41 +132,71 @@ def main() -> None:
         )
 
     if out_md:
-        lines = [
+        header = [
             "# Per-query profile (generated by tools/stage_profile.py)",
             "",
-            f"sf_dir `{sf_dir}`, {spark.sparkContext.master},"
+            f"sf_dir `{sf_dir}`, {sc.master},"
             " one warm-up pass then one measured run per query.",
-            "",
-            "- **build** = driver-side plan construction (py4j/Python, before any job)",
-            "- **exec** = action wall clock (stages + scheduling + AQE re-planning)",
-            f"- **cpu** = total executor run time across the run's stages (÷{cores} for the",
-            "  perfectly-parallel wall-clock floor)",
-            "",
-            f"| query | build s | exec s | executor cpu s | cpu/{cores} s |",
-            "|---|---|---|---|---|",
-        ]
-        for name in names:
-            b, e, _ = prof[name]
-            lines.append(
-                f"| {name} | {b:.3f} | {e:.3f} | {cpu[name]:.2f} | {cpu[name] / cores:.3f} |"
-            )
-        lines += [
-            f"| **total** | **{sum(prof[n][0] for n in names):.2f}** | "
-            f"**{sum(prof[n][1] for n in names):.2f}** | "
-            f"**{sum(cpu.values()):.1f}** | — |",
-            "",
-            f"Reading: a query whose exec ≫ cpu/{cores} is stage-floor-bound (plan",
-            f"shape / wave count — amortizes at scale); one whose exec ≈ cpu/{cores}",
-            "is compute-bound (expression/vectorization work would pay off).",
-            "Single measured run: treat ±20% per-cell as noise; the committed",
-            "bench artifacts remain the cross-round comparison basis.",
             "",
         ]
         with open(out_md, "w") as f:
-            f.write("\n".join(lines))
+            f.write("\n".join(header + markdown_table(prof, names, cores)))
         print(f"wrote {out_md}")
     spark.stop()
+
+
+def executor_s(stages: list[dict]) -> float:
+    """Executor run time summed over REST stage rows, in seconds."""
+    return sum(s.get("executorRunTime", 0) for s in stages) / 1000.0
+
+
+def build_stages_cell(stages: list[dict]) -> str:
+    """``"<n> (<executor s> s)"`` for the stages a query's build ran."""
+    return f"{len(stages)} ({executor_s(stages):.2f} s)"
+
+
+def markdown_table(
+    prof: dict[str, tuple[float, float, list[dict], list[dict]]],
+    names: list[str],
+    cores: int,
+) -> list[str]:
+    """The per-query table and its legend, as markdown lines."""
+    lines = [
+        "- **build** = wall clock of building the DataFrame: driver-side plan",
+        "  construction, plus any Spark jobs the build itself runs (iterative",
+        "  queries)",
+        "- **build_stages** = stages those build-time jobs ran, with their",
+        "  executor run time; `0 (0.00 s)` means the build was job-free",
+        "- **exec** = action wall clock (stages + scheduling + AQE re-planning)",
+        "- **cpu** = total executor run time across the run's stages, build and",
+        f"  action (÷{cores} for the perfectly-parallel wall-clock floor)",
+        "",
+        f"| query | build s | build_stages | exec s | executor cpu s | cpu/{cores} s |",
+        "|---|---|---|---|---|---|",
+    ]
+    cpu = {n: executor_s(prof[n][2]) + executor_s(prof[n][3]) for n in names}
+    for name in names:
+        b, e, built, _ = prof[name]
+        lines.append(
+            f"| {name} | {b:.3f} | {build_stages_cell(built)} | {e:.3f} | "
+            f"{cpu[name]:.2f} | {cpu[name] / cores:.3f} |"
+        )
+    lines += [
+        f"| **total** | **{sum(prof[n][0] for n in names):.2f}** | "
+        f"**{sum(len(prof[n][2]) for n in names)}** | "
+        f"**{sum(prof[n][1] for n in names):.2f}** | "
+        f"**{sum(cpu.values()):.1f}** | — |",
+        "",
+        f"Reading: a query whose exec ≫ cpu/{cores} is stage-floor-bound (plan",
+        f"shape / wave count — amortizes at scale); one whose exec ≈ cpu/{cores}",
+        "is compute-bound (expression/vectorization work would pay off).",
+        "A build with stages is not plan construction alone: its jobs belong",
+        "to the query's cost as much as the action's.",
+        "Single measured run: treat ±20% per-cell as noise; the committed",
+        "bench artifacts remain the cross-round comparison basis.",
+        "",
+    ]
+    return lines
 
 
 if __name__ == "__main__":
