@@ -20,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .operators.percentile import quantile_buckets
 from .operators.relational import grouped_sum, top_k
 
 
@@ -120,27 +119,6 @@ def build_ratings_sql(spark, lineitem: DataFrame, orders: DataFrame) -> DataFram
 def filter_min_listens(triplets: DataFrame, min_count: int = 2) -> DataFrame:
     """#cell4 — drop noise plays (listen_count < 2)."""
     return triplets.filter(F.col("listen_count") >= min_count)
-
-
-def filter_active_users(triplets: DataFrame, min_total: int = 20) -> DataFrame:
-    """#cell5-6 — keep users with ≥ min_total listens. Semi-join against
-    the per-user totals (broadcast when small; shuffle-safe regardless)."""
-    totals = grouped_sum(triplets, "user_id", "listen_count", "total")
-    active = totals.filter(F.col("total") >= min_total).select("user_id")
-    return triplets.join(active, "user_id", "left_semi")
-
-
-def bucket_ratings(triplets: DataFrame) -> DataFrame:
-    """#cell8-9 (W1) — level 1.0 default, else 2–5 by per-user listen
-    count quantiles (exact pandas-interpolation parity; see
-    operators/percentile.py)."""
-    out = quantile_buckets(
-        triplets, "user_id", "listen_count", (0.2, 0.4, 0.6, 0.8), out="level",
-        # MSD-shaped user base (~1M ⇒ ~40 MB of quantile rows): broadcast
-        # the per-user boundaries instead of shuffling the fact side.
-        broadcast_quantiles=True,
-    )
-    return out.withColumn("level", F.col("level").cast("double"))
 
 
 def build_ratings(

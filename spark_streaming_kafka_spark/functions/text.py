@@ -213,11 +213,6 @@ def default_afinn_path() -> str:
     return _AFINN_CORE
 
 
-def load_default_afinn() -> dict[str, int]:
-    """:func:`load_afinn_lexicon` over the vendored core lexicon."""
-    return load_afinn_lexicon(default_afinn_path())
-
-
 def load_afinn_lexicon(path: str) -> dict[str, int]:
     """Parse a standard AFINN wordlist (``word<TAB>score`` per line —
     the distribution format of AFINN-111/AFINN-165). A vendored core
@@ -402,9 +397,7 @@ def with_char_entropy(
 #: classifier" gate public LM pipelines run (a linear model over cheap
 #: text features). Weights are FROZEN here so corpus scoring is
 #: deterministic and engine-portable (the DuckDB oracle replays the
-#: same arithmetic); the in-repo training path that produces such
-#: weights is :mod:`..operators.quality_clf` (pyspark.ml logistic
-#: regression over the same feature frame).
+#: same arithmetic).
 QUALITY_LR_WEIGHTS: dict[str, float] = {
     "bias": -2.0,
     "len_norm": 2.5,        # applied to min(n_tokens/50, 1)

@@ -1139,14 +1139,6 @@ def _seg_len(l2: Column, i: int, k: int) -> Column:
     return (base + (F.lit(i) >= (k - l2 % k)).cast("long")).cast("int")
 
 
-def _seg_start(l2: Column, i: int, k: int) -> Column:
-    """0-based start of segment ``i`` = Σ lengths of segments < i."""
-    s = F.lit(0).cast("int")
-    for j in range(i):
-        s = s + _seg_len(l2, j, k)
-    return s
-
-
 def passjoin_edit_distance_pairs(
     df: DataFrame,
     block_col: str,

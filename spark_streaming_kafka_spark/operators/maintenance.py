@@ -25,10 +25,7 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 #: Scanner-friendly target: big enough to amortize open/footer cost,
 #: small enough that one file ≈ one task's comfortable input.
@@ -103,76 +100,3 @@ def compact_parquet(
     out.write.mode("error").parquet(dst)
     return n
 
-
-def z_value(df: DataFrame, cols: list[str], bits: int = 8) -> DataFrame:
-    """Add ``__z``: the Z-order (Morton) value of ``cols`` — each
-    column quantile-bucketized to ``bits`` bits, then bit-interleaved.
-    Rows close in __z are close in EVERY listed column, which is what
-    multi-column data skipping needs (:func:`cluster_for_skipping` is
-    exact on its FIRST column only; Z-order trades a little per-column
-    locality for locality on all).
-
-    Scale shape: bucket boundaries come from ``approxQuantile`` (one
-    sketch pass per column, driver gets 2^bits doubles — KB-sized);
-    each row's bucket is a numpy ``searchsorted`` against the
-    broadcast boundaries inside an Arrow-batched UDF. NO global window
-    and no single-partition sort anywhere — a deliberate contrast with
-    the textbook percent_rank formulation, which serializes the whole
-    table through one task. Quantile (not min/max) bucketization makes
-    the curve skew-proof: each column fills its 2^bits lattice
-    uniformly regardless of distribution. Boundaries are as
-    deterministic as the quantile sketch; layout is a performance
-    concern, never a correctness one.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType
-
-    probs = [i / (1 << bits) for i in range(1, 1 << bits)]
-
-    def make_bucket(bounds: "np.ndarray"):
-        @pandas_udf(LongType())
-        def bucket(v: pd.Series) -> pd.Series:
-            idx = np.searchsorted(
-                bounds, v.to_numpy(dtype=np.float64), side="right"
-            )
-            return pd.Series(idx.astype(np.int64))
-
-        return bucket
-
-    # ONE sketch pass computes every column's boundaries (the
-    # list-of-columns overload) — k separate calls would scan the
-    # input k times
-    all_bounds = df.approxQuantile(list(cols), probs, 1.0 / (4 << bits))
-    out = df
-    for i, c in enumerate(cols):
-        bounds = np.array(all_bounds[i], dtype=np.float64)
-        out = out.withColumn(f"__q{i}", make_bucket(bounds)(F.col(c)))
-    # interleave: bit b of column i lands at position b*len(cols)+i
-    n = len(cols)
-    terms = []
-    for i in range(n):
-        for b in range(bits):
-            terms.append(
-                f"(shiftleft(shiftright(__q{i}, {b}) & 1, {b * n + i}))"
-            )
-    z = F.expr(" + ".join(terms)).cast("long")
-    out = out.withColumn("__z", z)
-    return out.drop(*[f"__q{i}" for i in range(n)])
-
-
-def z_order_cluster(
-    df: DataFrame, cols: list[str], num_partitions: int, bits: int = 8
-) -> DataFrame:
-    """Range-partition + sort by the Z-value so a subsequent write
-    yields files whose min/max footprint is small on ALL of ``cols``
-    at once — pushed-down filters on any listed column then skip most
-    files. The dependency-free version of a lakehouse OPTIMIZE ZORDER
-    BY; file-footprint shrinkage is asserted against per-file min/max
-    in tests."""
-    zv = z_value(df, cols, bits)
-    return (
-        zv.repartitionByRange(num_partitions, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )

@@ -178,44 +178,6 @@ def frame_sample_plan(media: DataFrame, every_n: int = 30) -> DataFrame:
     )
 
 
-def resize_images(
-    media: DataFrame, width: int, height: int, codec: str | None = None
-) -> DataFrame:
-    """Image resize. ``codec="real"``: decode PNG payloads, resample
-    nearest-neighbor (media_codecs.resize_nearest), re-encode PNG —
-    output payloads are genuine images at the target size. ``"stub"``
-    (default via ``_STUB_DECODERS``): pass payloads through with target
-    dims recorded — the plumbing-only mode for fake-byte corpora."""
-    if codec is None:
-        codec = "stub" if _STUB_DECODERS else "real"
-    if codec not in ("stub", "real"):
-        raise ValueError(f"codec must be 'stub' or 'real', got {codec!r}")
-    real = codec == "real"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from . import media_codecs as mc
-
-        for pdf in batches:
-            if real:
-                out_payload = [
-                    mc.encode_png(mc.resize_nearest(mc.decode_png(p), width, height))
-                    for p in pdf["payload"]
-                ]
-            else:
-                out_payload = pdf["payload"]  # no-op stand-in
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": out_payload,
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    schema = "media_id long, payload binary, width int, height int"
-    return media.filter(F.col("kind") == "image").mapInPandas(run, schema=schema)
-
-
 def ahash60(pixels) -> int:
     """60-bit average-hash of a grayscale pixel block: bit p is set iff
     ``flat[p] > mean(flat[:64])``. 60 bits (not 64) keeps the value

@@ -8,8 +8,8 @@ to a 1–5 level with an if/elif chain. Two rebuild variants:
 - :func:`quantile_buckets` (Option A) reproduces the reference semantics
   exactly: per-group linear-interpolation quantiles (Spark ``percentile``
   uses the same formula as pandas' default) + a ``when`` chain on ``>=``
-  boundaries. One hash-agg shuffle on the group key + one broadcast-less
-  equi-join back (same key ⇒ co-partitioned, AQE plans it cheaply).
+  boundaries. One hash-agg shuffle on the group key + a broadcast join of
+  the per-group boundaries back onto the rows (no second shuffle).
 - :func:`ntile_buckets` (Option B) is the idiomatic form — single window
   shuffle, no join — but differs from the reference on ties (ntile splits
   equal values across buckets; the reference gives equal values equal
@@ -54,24 +54,19 @@ def quantile_buckets(
     probs: Sequence[float] = (0.2, 0.4, 0.6, 0.8),
     out: str = "level",
     exact: bool = True,
-    broadcast_quantiles: bool = False,
 ) -> DataFrame:
     """Option A: label each row 1..len(probs)+1 by where ``value`` falls
     among its group's quantiles (``>=`` upper boundaries first, matching
     the reference's elif ordering).
 
-    ``broadcast_quantiles``: the quantile side is one ~40-byte row per
-    GROUP; when group cardinality is bounded (the reference's user base:
-    ~1M users ⇒ ~40 MB) broadcasting it turns the join-back into a
-    shuffle-free map over ``df`` (~35% faster measured at sf0.1 — AQE
-    does not reliably promote it because both shuffles already ran).
-    Leave False when groups can be unbounded (e.g. billions of keys):
-    a broadcast that size fails hard, the sort-merge join degrades
-    gracefully."""
-    qs = group_quantiles(df, group, value, probs, exact)
-    if broadcast_quantiles:
-        qs = F.broadcast(qs)
-    joined = df.join(qs, group)  # same-key equi-join, co-partitioned agg
+    The quantile side (one ~40-byte row per GROUP) is broadcast, so the
+    join-back is a shuffle-free map over ``df`` (~35% faster measured at
+    sf0.1 — AQE does not reliably promote it because both shuffles
+    already ran). The group count must stay bounded: the reference's
+    user base (~1M users) is ~40 MB of boundaries, while billions of
+    groups would fail the broadcast."""
+    qs = F.broadcast(group_quantiles(df, group, value, probs, exact))
+    joined = df.join(qs, group)
     v = F.col(value)
     n = len(probs)
     # level = n+1 if v >= q_{n-1}, n if v >= q_{n-2}, ..., else 1

@@ -641,59 +641,6 @@ def ivf_topk(
     ).select("query_id", "neighbor_id", "cosine", "rank")
 
 
-def cosine_topk_numpy(
-    emb: DataFrame,
-    queries: list[tuple[int, list[float]]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Brute-force top-k with a numpy-matmul ``mapInPandas`` scorer.
-
-    The Arrow path: each partition arrives as pandas batches, the query
-    matrix (broadcast via closure — small) hits the batch in one BLAS
-    call. Wins over column algebra when dims ≫ 10³ or |Q| ≫ 10².
-    Returns (query_id, neighbor_id, cosine) unranked — feed to
-    ``per_group_top_k`` for the final cut (partial per-partition top-k
-    happens here first, so the shuffle carries ≤ |Q|·k rows/partition).
-    """
-    import numpy as np
-
-    qids = np.array([q[0] for q in queries], dtype=np.int64)
-    qmat = np.array([q[1] for q in queries], dtype=np.float64)
-    qnorm = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-    kk = k
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = mat @ qnorm.T  # batch × |Q|
-            # Self-matches masked BEFORE the per-batch cut — otherwise the
-            # query's own vector (cosine 1.0) occupies a top-k slot and a
-            # genuine global neighbor can be silently dropped.
-            sims[ids[:, None] == qids[None, :]] = -np.inf
-            row_order = np.argsort(ids, kind="stable")  # deterministic ties
-            s = sims[row_order].T  # (|Q|, batch), neighbor-id ascending
-            take = min(kk, s.shape[1])
-            top = np.argsort(-s, axis=1, kind="stable")[:, :take]
-            cos = np.take_along_axis(s, top, axis=1).ravel()
-            keep = np.isfinite(cos)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids, take)[keep],
-                    "neighbor_id": ids[row_order][top].ravel()[keep],
-                    "cosine": cos[keep],
-                }
-            )
-
-    out_schema = "query_id long, neighbor_id long, cosine double"
-    return emb.mapInPandas(score, schema=out_schema)
-
-
 # --- embedding quality control: per-label centroids & outliers ---------
 
 def label_centroids(

@@ -5,7 +5,7 @@ processing-time micro-batches only), but fundamental for the events
 table and for any watermarked streaming aggregation; the same operators
 run unchanged on a batch DataFrame or a streaming one (Structured
 Streaming plans ``F.window`` groupings incrementally with state cleanup
-once a watermark is set — see streaming/windows.py for the stream form).
+once ``withWatermark`` is set on the stream).
 
 Spark's ``F.window`` buckets are epoch-aligned, so the oracle can verify
 with plain integer arithmetic on epoch millis — no engine-specific

@@ -471,11 +471,9 @@ def q_percentile_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (music_ETL.ipynb#cell9) with exact pandas-style interpolation,
     customers standing in for users, order totals for listen counts."""
     orders = _t(spark, sf_dir, "orders")
-    # customer cardinality is bounded (dimension-sized) ⇒ broadcast the
-    # per-customer quantile boundaries; see quantile_buckets docstring
-    out = quantile_buckets(
-        orders, "o_custkey", "o_totalprice", broadcast_quantiles=True
-    )
+    # customer cardinality is bounded (dimension-sized): quantile_buckets
+    # broadcasts the per-customer boundaries
+    out = quantile_buckets(orders, "o_custkey", "o_totalprice")
     return out.select("o_orderkey", "o_custkey", "level")
 
 
@@ -1417,6 +1415,10 @@ def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_ann_sql() -> str:
+    # Plane dot products are computed relationally (a VALUES × embeddings
+    # join, summed per plane) rather than with a list comprehension:
+    # DuckDB 1.0 lacks lateral array refs in list_transform over
+    # correlated subqueries.
     planes = [sim.hyperplane(64, p) for p in range(8)]
     plane_rows = ", ".join(
         f"({p}, {i}, {c})" for p, plane in enumerate(planes) for i, c in enumerate(plane)
@@ -1937,7 +1939,7 @@ def q_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time window per event_type — one hash agg,
     key space = hours × types. Spark windows are epoch-aligned so the
     oracle is pure epoch-millis arithmetic. Same operator runs
-    incrementally under a watermark in streaming (streaming/windows.py)."""
+    incrementally on a watermarked stream."""
     from .operators.timewindows import hourly_type_stats
 
     return hourly_type_stats(_t(spark, sf_dir, "events"))
@@ -3780,15 +3782,6 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------
-
-def _lateral_dot_note() -> None:
-    """The LSH oracle computes plane dot products relationally (unnest ×
-    VALUES join) rather than via list comprehension — documented here so
-    the SQL's shape is explicable: DuckDB 1.0 lacks lateral array refs
-    in list_transform over correlated subqueries."""
-
-
 # =====================================================================
 # Retrieval / corpus-statistics / chunking / anomaly surface
 # =====================================================================
@@ -5296,10 +5289,7 @@ def q_quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights (functions/text.py::QUALITY_LR_WEIGHTS) so scoring is
     deterministic and engine-portable. The linear term is rounded
     before the sigmoid so both engines exponentiate identical inputs.
-    Pure codegen'd column algebra, no UDF, no shuffle. The pyspark.ml
-    TRAINED path (same features, LBFGS logistic regression) lives in
-    operators/quality_clf.py with pytest evidence — the ALS/kmeans
-    convention for non-oracle-able training."""
+    Pure codegen'd column algebra, no UDF, no shuffle."""
     from .functions.text import logistic_quality
 
     docs = _docs_fan(spark, sf_dir)

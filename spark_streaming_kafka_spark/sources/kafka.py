@@ -108,61 +108,3 @@ def kafka_batch_write(df: DataFrame, bootstrap_servers: str, topic: str) -> None
         .save()
     )
 
-
-# --- S10: Kafka REST proxy client ------------------------------------
-
-class KafkaRestProducer:
-    """Kafka REST proxy produce client (S10 — reference
-    ``line_music.ipynb#cell0``: ``requests.post`` to
-    ``http://host:8082/topics/<topic>`` with
-    ``application/vnd.kafka.json.v2+json``).
-
-    Deliberately out-of-engine: this is a test-fixture / edge-ingest
-    client, not a Spark path — bulk produce goes through the kafka sink
-    (executor-side, offset-tracked). Differences from the reference:
-
-    - values are REAL JSON objects, not ``str(dict)`` payloads (the
-      reference's consumers then ``eval`` them — the injection bug this
-      rebuild removes everywhere);
-    - stdlib ``urllib`` (no requests dependency), explicit timeout,
-      non-2xx raises.
-    """
-
-    def __init__(self, base_url: str, timeout: float = 10.0) -> None:
-        self.base_url = base_url.rstrip("/")
-        self.timeout = timeout
-
-    def send(
-        self,
-        topic: str,
-        values: list[dict],
-        keys: list | None = None,
-    ) -> dict:
-        """POST records to ``{base_url}/topics/{topic}``; returns the
-        proxy's JSON response (per-record partition/offset)."""
-        import json
-        import urllib.request
-
-        if keys is not None and len(keys) != len(values):
-            raise ValueError(
-                f"keys/values length mismatch: {len(keys)} != {len(values)}"
-            )
-        records = [
-            {"value": v} if keys is None else {"key": k, "value": v}
-            for v, k in zip(values, keys or [None] * len(values))
-        ]
-        req = urllib.request.Request(
-            f"{self.base_url}/topics/{topic}",
-            data=json.dumps({"records": records}).encode(),
-            headers={"Content-Type": "application/vnd.kafka.json.v2+json"},
-            method="POST",
-        )
-        with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-            return json.loads(resp.read().decode())
-
-    def send_rows(self, df: DataFrame, topic: str, key_col: str | None = None) -> dict:
-        """Produce a SMALL DataFrame's rows (collects to the driver — by
-        design: REST produce is for fixtures/edge events, never bulk)."""
-        rows = [r.asDict(recursive=True) for r in df.collect()]
-        keys = [r.pop(key_col) for r in rows] if key_col else None
-        return self.send(topic, rows, keys)

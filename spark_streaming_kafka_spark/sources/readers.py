@@ -193,49 +193,6 @@ def write_csv(df: DataFrame, path: str, header: bool = True, mode: str = "overwr
     df.write.option("header", header).mode(mode).csv(path)
 
 
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_by: str,
-    num_buckets: int = 64,
-    sort_by: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed table — the co-located-join primitive.
-
-    Two tables bucketed the same way on their join key join WITHOUT a
-    shuffle (each bucket pair joins locally). For repeated fact⋈fact
-    joins at 100 TB, paying one bucketed write amortizes every later
-    join/aggregation on that key. ``sort_by`` additionally pre-sorts
-    within buckets (sort-merge join with zero sort).
-    """
-    writer = df.write.format("parquet").mode(mode).bucketBy(num_buckets, bucket_by)
-    if sort_by:
-        writer = writer.sortBy(sort_by)
-    writer.saveAsTable(table)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — Spark-native columnar alternative to parquet with the
-    same pushdown/pruning behavior (vectorized reader, min/max stats,
-    bloom filters). Interop surface for warehouses whose tables are
-    ORC-managed (classic Hive estates)."""
-    return spark.read.orc(path)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """ORC sink, same partitioning contract as :func:`write_parquet`."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
 def write_parquet(
     df: DataFrame,
     path: str,
@@ -250,59 +207,3 @@ def write_parquet(
         w = w.partitionBy(*partition_by)
     w.parquet(path)
 
-
-def read_jsonl_quarantine(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    corrupt_col: str = "_corrupt_record",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """JSON-lines scan that SPLITS malformed rows into a quarantine
-    side instead of silently nulling (PERMISSIVE) or dying (FAILFAST)
-    — the ingest contract a production feed needs: good rows flow, bad
-    rows land in a reviewable table with their raw bytes.
-
-    Returns ``(good, quarantined, raw)``; ``quarantined`` holds the raw
-    line in ``corrupt_col``. ``raw`` is the CACHED parent both children
-    filter — the cache is mandatory (Spark refuses un-cached plans
-    whose referenced columns prune down to only the internal corrupt
-    column, which even ``quarantined.count()`` does), and the CALLER
-    owns its lifetime: call ``raw.unpersist()`` after materializing
-    both sides, or a long-lived session leaks one pinned
-    InMemoryRelation per ingest call.
-    """
-    full = StructType(schema.fields[:]).add(corrupt_col, "string")
-    raw = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .json(path)
-    ).cache()
-    good = raw.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    bad = raw.filter(F.col(corrupt_col).isNotNull()).select(corrupt_col)
-    return good, bad, raw
-
-
-def read_csv_quarantine(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    header: bool = True,
-    sep: str = ",",
-    corrupt_col: str = "_corrupt_record",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """CSV twin of :func:`read_jsonl_quarantine`: malformed rows (wrong
-    arity, uncastable fields) quarantine with their raw text. Same
-    contract: caller unpersists the returned ``raw``."""
-    full = StructType(schema.fields[:]).add(corrupt_col, "string")
-    raw = (
-        spark.read.schema(full)
-        .option("header", header)
-        .option("sep", sep)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .csv(path)
-    ).cache()
-    good = raw.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    bad = raw.filter(F.col(corrupt_col).isNotNull()).select(corrupt_col)
-    return good, bad, raw

@@ -12,7 +12,8 @@ contract every stateful operator in this package keeps.
 Ordering: rows are paired in (ts_ms, tiebreak) order WITHIN each
 micro-batch (sorted before the scan); across batches the operator
 trusts micro-batch arrival order — the standard applyInPandasWithState
-contract (same caveat as ``streaming/anomaly.py``).
+contract (exact event-time order across batches would need a watermarked
+window, which cannot carry a row-to-row edge).
 
 Downstream, the emitted (prev_state, next_state) rows feed whatever the
 batch pairs feed: a ``foreachBatch`` count aggregate maintains the live

@@ -246,41 +246,6 @@ def test_temporal_join_plans_scale(spark):
     assert cols == {"doc_id", "text"}  # lang/source/n_chars pruned at scan
 
 
-def test_windowed_stream_agg_with_watermark(spark):
-    from spark_streaming_kafka_spark.streaming.windows import windowed_stream_agg
-
-    spark.sql("DROP TABLE IF EXISTS win_out")
-    stream = spark.readStream.format("rate").option("rowsPerSecond", "100").load()
-    agg = windowed_stream_agg(
-        stream,
-        "timestamp",
-        "2 seconds",
-        [F.count(F.lit(1)).alias("n")],
-        watermark="0 seconds",
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_out")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        deadline = time.time() + 30
-        rows = []
-        while time.time() < deadline:
-            rows = spark.sql("SELECT * FROM win_out").collect()
-            if len(rows) >= 2:
-                break
-            time.sleep(0.5)
-        assert len(rows) >= 2
-        assert all(
-            r["window_end_ms"] - r["window_start_ms"] == 2000 and r["n"] >= 1
-            for r in rows
-        )
-    finally:
-        q.stop()
-
-
 def test_band_join_zero_tolerance_rejected(spark):
     import pytest as _pytest
 

@@ -181,31 +181,6 @@ def test_lsh_results_subset_of_bucketmates_and_agree_with_bruteforce(spark, emb)
         assert buckets[r["query_id"]] == buckets[r["neighbor_id"]]
 
 
-def test_numpy_scorer_matches_column_algebra(spark, emb):
-    qrows = emb.filter(F.col("vec_id") < 2).collect()
-    queries = [(r["vec_id"], list(r["embedding"])) for r in qrows]
-    scored = sim.cosine_topk_numpy(emb, queries, k=500)
-    qdf = emb.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = sim.cosine_topk(emb, qdf, k=5, round_digits=6)
-    approx_top = {}
-    from spark_streaming_kafka_spark.operators.windows import per_group_top_k
-
-    ranked = per_group_top_k(
-        scored.withColumn("cosine", F.round("cosine", 6)),
-        "query_id",
-        [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-        5,
-    )
-    for r in ranked.collect():
-        approx_top[(r["query_id"], r["rank"])] = (r["neighbor_id"], r["cosine"])
-    for r in exact.collect():
-        nid, cos = approx_top[(r["query_id"], r["rank"])]
-        assert nid == r["neighbor_id"]
-        assert cos == pytest.approx(r["cosine"], abs=1e-6)
-
-
 def test_embedding_near_dup_bucketed_path_no_self_join(spark):
     """Above the size gate, embedding_near_dup_pairs must route through
     sign-LSH buckets: no join operator at all (pairs come from in-bucket

@@ -60,122 +60,3 @@ def test_cluster_for_skipping_disjoint_file_ranges(spark, tmp_path):
     ranges.sort()
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
         assert hi1 <= lo2  # non-overlapping: min/max stats can skip files
-
-
-def test_bucketed_join_no_shuffle(spark, tables, tmp_path):
-    """Two tables bucketed on the same key/count sort-merge-join with
-    ZERO Exchange and (with sortBy) zero extra Sort — the pre-paid
-    shuffle that makes repeated fact⋈fact joins delta-cost at 100 TB."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from spark_streaming_kafka_spark.sources.readers import (
-        write_bucketed_table,
-    )
-
-    orders = tables["orders"].select("o_orderkey", "o_custkey", "o_totalprice")
-    li = tables["lineitem"].select("l_orderkey", "l_extendedprice")
-    write_bucketed_table(
-        orders, "bkt_orders", "o_orderkey", 4, sort_by="o_orderkey"
-    )
-    write_bucketed_table(
-        li.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "bkt_lineitem",
-        "o_orderkey",
-        4,
-        sort_by="o_orderkey",
-    )
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force the sort-merge path (tiny test tables would otherwise
-        # broadcast); the bucket layout only matters for SMJ anyway
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        a = spark.table("bkt_orders")
-        b = spark.table("bkt_lineitem")
-        joined = a.join(b, "o_orderkey").groupBy("o_custkey").agg(
-            F.sum("l_extendedprice").alias("rev")
-        )
-        got = {r["o_custkey"]: round(r["rev"], 2) for r in joined.collect()}
-        # final adaptive plan (post-execution): the join consumes the
-        # bucket layout directly — no shuffle on the join key and the
-        # bucketed scan is visible; the agg after it may still exchange
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "SelectedBucketsCount: 4 out of 4" in plan
-        assert "Exchange hashpartitioning(o_orderkey" not in plan
-        # equality vs the plain path-read join
-        expect = (
-            orders.join(
-                li.withColumnRenamed("l_orderkey", "o_orderkey"), "o_orderkey"
-            )
-            .groupBy("o_custkey")
-            .agg(F.sum("l_extendedprice").alias("rev"))
-        )
-        want = {r["o_custkey"]: round(r["rev"], 2) for r in expect.collect()}
-        assert got == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        spark.sql("DROP TABLE IF EXISTS bkt_orders")
-        spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
-        shutil.rmtree("spark-warehouse", ignore_errors=True)
-
-
-def test_z_order_cluster_shrinks_file_footprints(spark, tables, tmp_path):
-    """Files written after Z-order clustering cover a much smaller
-    min/max footprint on BOTH clustered columns than a round-robin
-    layout — the property parquet data skipping actually uses."""
-    from pyspark.sql import functions as F
-
-    from spark_streaming_kafka_spark.operators.maintenance import (
-        z_order_cluster,
-    )
-
-    orders = tables["orders"].select("o_custkey", "o_totalprice")
-
-    def avg_footprint(path: str) -> float:
-        df = spark.read.parquet(path).withColumn(
-            "f", F.input_file_name()
-        )
-        g = df.groupBy("f").agg(
-            (F.max("o_custkey") - F.min("o_custkey")).alias("s1"),
-            (F.max("o_totalprice") - F.min("o_totalprice")).alias("s2"),
-        )
-        lo1, hi1, lo2, hi2 = orders.agg(
-            F.min("o_custkey"), F.max("o_custkey"),
-            F.min("o_totalprice"), F.max("o_totalprice"),
-        ).collect()[0]
-        rows = g.collect()
-        return sum(
-            (r["s1"] / (hi1 - lo1) + r["s2"] / (hi2 - lo2)) / 2 for r in rows
-        ) / len(rows)
-
-    rr = str(tmp_path / "rr")
-    zo = str(tmp_path / "zo")
-    orders.repartition(8).write.parquet(rr)
-    z_order_cluster(orders, ["o_custkey", "o_totalprice"], 8).write.parquet(zo)
-
-    base = avg_footprint(rr)
-    clustered = avg_footprint(zo)
-    # round-robin files each span ~the whole domain (~1.0); z-ordered
-    # files must be dramatically tighter on the two columns TOGETHER
-    assert clustered < 0.6 * base, (clustered, base)
-    # layout change must not change content
-    a = sorted(map(tuple, spark.read.parquet(zo).collect()))
-    b = sorted(map(tuple, orders.collect()))
-    assert a == b
-
-
-def test_z_value_basic_properties(spark):
-    from spark_streaming_kafka_spark.operators.maintenance import z_value
-
-    df = spark.range(256).select(
-        F.col("id").alias("a"), (255 - F.col("id")).alias("b")
-    )
-    out = z_value(df, ["a", "b"], bits=4).collect()
-    zs = [r["__z"] for r in out]
-    assert all(0 <= z < 256 for z in zs)  # 2 cols × 4 bits → 8-bit z
-    # identical rows get identical z
-    df2 = spark.createDataFrame([(1, 1)] * 5, "a long, b long")
-    z2 = {r["__z"] for r in z_value(df2, ["a", "b"], bits=4).collect()}
-    assert len(z2) == 1

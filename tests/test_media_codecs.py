@@ -14,10 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_streaming_kafka_spark.operators import media_codecs as mc
-from spark_streaming_kafka_spark.operators.multimodal import (
-    extract_media_features,
-    resize_images,
-)
+from spark_streaming_kafka_spark.operators.multimodal import extract_media_features
 
 #: A well-known tiny real-world PNG (1x1, RGBA, produced by an external
 #: encoder) — decoding it proves format compat beyond our own encoder.
@@ -182,18 +179,6 @@ def test_extract_media_features_real_rejects_cross_typed_payload(spark):
     )
     with pytest.raises(Exception, match="not WAV"):
         extract_media_features(media, codec="real").collect()
-
-
-def test_resize_images_real_produces_decodable_png(spark):
-    img = _rng(2).integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(mc.encode_png(img)))],
-        "media_id long, kind string, payload binary",
-    )
-    row = resize_images(media, 8, 8, codec="real").first()
-    out = mc.decode_png(bytes(row["payload"]))
-    assert out.shape == (8, 8, 3)
-    assert np.array_equal(out, mc.resize_nearest(img, 8, 8))
 
 
 def test_stub_mode_unchanged_default(spark):

@@ -10,7 +10,6 @@ import pytest
 from spark_streaming_kafka_spark.operators.multimodal import (
     extract_media_features,
     frame_sample_plan,
-    resize_images,
 )
 
 @pytest.fixture(scope="module")
@@ -41,12 +40,6 @@ def test_frame_sample_plan_only_videos(media):
     assert {r["media_id"] for r in out} == {1}
     idx = sorted(r["frame_index"] for r in out)
     assert idx[0] == 0 and all(i % 10 == 0 for i in idx)
-
-
-def test_resize_images_only_images(media):
-    out = resize_images(media, 32, 32).collect()
-    assert [r["media_id"] for r in out] == [0]
-    assert out[0]["width"] == 32
 
 
 def test_image_ahash_collapses_rescaled_copies(spark):

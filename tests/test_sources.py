@@ -120,91 +120,11 @@ def test_load_table_events_ntz_micros_normalized(spark, tmp_path):
     assert ms == int(wall.replace(tzinfo=datetime.timezone.utc).timestamp() * 1000)
 
 
-def test_kafka_rest_producer_roundtrip(spark):
-    """S10: the REST produce client posts real JSON records (never
-    str(dict) payloads) with the vnd.kafka.json.v2 content type —
-    verified against a live local HTTP server."""
-    import threading
-    from http.server import BaseHTTPRequestHandler, HTTPServer
-
-    from spark_streaming_kafka_spark.sources.kafka import KafkaRestProducer
-
-    captured = {}
-
-    class Handler(BaseHTTPRequestHandler):
-        def do_POST(self):
-            captured["path"] = self.path
-            captured["ctype"] = self.headers["Content-Type"]
-            captured["body"] = self.rfile.read(int(self.headers["Content-Length"]))
-            self.send_response(200)
-            self.send_header("Content-Type", "application/vnd.kafka.v2+json")
-            self.end_headers()
-            self.wfile.write(b'{"offsets": [{"partition": 0, "offset": 0}]}')
-
-        def log_message(self, *a):  # quiet
-            pass
-
-    srv = HTTPServer(("127.0.0.1", 0), Handler)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    try:
-        prod = KafkaRestProducer(f"http://127.0.0.1:{srv.server_port}")
-        df = spark.createDataFrame(
-            [(7, "song a", 4.5)], "userid int, music string, rating double"
-        )
-        resp = prod.send_rows(df, "music_test1", key_col="userid")
-        assert resp["offsets"][0]["partition"] == 0
-        assert captured["path"] == "/topics/music_test1"
-        assert captured["ctype"] == "application/vnd.kafka.json.v2+json"
-        body = json.loads(captured["body"])
-        rec = body["records"][0]
-        assert rec["key"] == 7
-        # a real JSON object — parseable fields, not an eval-able str(dict)
-        assert rec["value"] == {"music": "song a", "rating": 4.5}
-    finally:
-        srv.shutdown()
-
-
 def test_kafka_record_shaping(spark):
     df = spark.createDataFrame([(1, "t", 4.5)], "user_id int, title string, pred double")
     rec = to_kafka_records(df, F.col("user_id"), ["title", "pred"]).first()
     assert rec["key"] == "1"
     assert json.loads(rec["value"]) == {"title": "t", "pred": 4.5}
-
-
-def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
-    """The co-located-join primitive (write_bucketed_table): two tables
-    bucketed+sorted the same way on the join key must sort-merge join
-    with NO Exchange and NO Sort on either side — the plan shape that
-    makes repeated fact-to-fact joins scan-bound at 100 TB."""
-    import pyspark.sql.functions as F
-
-    from spark_streaming_kafka_spark.sources.readers import write_bucketed_table
-
-    a = spark.range(0, 10000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("va")
-    )
-    b = spark.range(0, 10000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("vb")
-    )
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        write_bucketed_table(a, "bkt_a", bucket_by="k", num_buckets=8, sort_by="k")
-        write_bucketed_table(b, "bkt_b", bucket_by="k", num_buckets=8, sort_by="k")
-        # disable auto-broadcast: the fixture is small, but the plan
-        # under test is the big-table path (fact ⋈ fact at 100 TB)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("bkt_a").join(spark.table("bkt_b"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # bucket co-location: no shuffle
-        # (a Sort may remain: per-bucket sortBy order is only exploited
-        # when each bucket is a single file — parallel writers split it)
-        assert joined.count() == 10000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
 
 
 def test_partitioned_write_prunes_partitions_on_read(spark, tmp_path):
@@ -272,75 +192,6 @@ def test_supplier_snowflake_plan_broadcasts_all_dims(spark, sf_dir):
     cols = set(scan_read_schema(df))
     assert {"l_suppkey", "l_extendedprice", "l_discount"} <= cols
     assert "l_comment" not in cols and "l_orderkey" not in cols
-
-
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    """ORC round-trip preserves schema+content, and a filter on the
-    ORC scan is pushed down (PushedFilters in the scan node) just like
-    parquet — the interop path for Hive-estate ORC tables."""
-    from spark_streaming_kafka_spark.plans.inspect import explain_str
-    from spark_streaming_kafka_spark.sources.readers import read_orc, write_orc
-
-    from pyspark.sql import functions as F
-
-    path = str(tmp_path / "orc_t")
-    df = spark.range(0, 1000).select(
-        F.col("id"), (F.col("id") % 7).alias("k"), F.md5(F.col("id").cast("string")).alias("s")
-    )
-    write_orc(df, path)
-    back = read_orc(spark, path)
-    # file formats surface everything nullable; compare names + types
-    assert [(f.name, f.dataType) for f in back.schema] == [
-        (f.name, f.dataType) for f in df.schema
-    ]
-    assert back.count() == 1000
-    assert back.exceptAll(df).isEmpty()
-
-    plan = explain_str(back.filter(F.col("k") == 3).select("id"), "formatted")
-    assert "PushedFilters: [" in plan and "k" in plan.split("PushedFilters")[1][:80]
-
-
-def test_jsonl_quarantine_split(spark, tmp_path):
-    from pyspark.sql.types import LongType, StringType, StructType
-
-    from spark_streaming_kafka_spark.sources.readers import (
-        read_jsonl_quarantine,
-    )
-
-    p = tmp_path / "feed.jsonl"
-    p.write_text(
-        '{"id": 1, "name": "ok"}\n'
-        "this is not json\n"
-        '{"id": 2, "name": "also ok"}\n'
-        '{"id": "NaN-ish", "name": 3}\n'  # uncastable id → quarantine
-    )
-    schema = StructType().add("id", LongType()).add("name", StringType())
-    good, bad, raw = read_jsonl_quarantine(spark, str(p), schema)
-    try:
-        assert sorted(r["id"] for r in good.collect()) == [1, 2]
-        raws = [r["_corrupt_record"] for r in bad.collect()]
-        assert len(raws) == 2 and any("not json" in r for r in raws)
-        assert good.columns == ["id", "name"]  # corrupt col dropped
-    finally:
-        raw.unpersist()  # caller-owned cache (see docstring)
-
-
-def test_csv_quarantine_split(spark, tmp_path):
-    from pyspark.sql.types import DoubleType, LongType, StructType
-
-    from spark_streaming_kafka_spark.sources.readers import (
-        read_csv_quarantine,
-    )
-
-    p = tmp_path / "feed.csv"
-    p.write_text("id,score\n1,0.5\nnot_a_number,0.7\n3,0.9\n")
-    schema = StructType().add("id", LongType()).add("score", DoubleType())
-    good, bad, raw = read_csv_quarantine(spark, str(p), schema)
-    try:
-        assert sorted(r["id"] for r in good.collect()) == [1, 3]
-        assert bad.count() == 1
-    finally:
-        raw.unpersist()
 
 
 def test_tuning_profiles_shapes():

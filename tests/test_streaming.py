@@ -319,40 +319,6 @@ def test_idempotent_parquet_sink_replay_safe(spark, tmp_path):
     assert {r["_batch_id"] for r in out.select("_batch_id").distinct().collect()} == {0, 1}
 
 
-def test_streaming_exact_dedup_suppresses_redelivery(spark, tmp_path):
-    """Streaming twin of exact_dedup: payload-identical rows delivered
-    again within the watermark are suppressed; distinct payloads pass."""
-    from spark_streaming_kafka_spark.streaming.dedup import streaming_exact_dedup
-
-    rows = [
-        ("2026-01-01 10:00:00", "doc one text"),
-        ("2026-01-01 10:00:05", "doc one text"),   # redelivery → dropped
-        ("2026-01-01 10:00:10", "doc two text"),
-        ("2026-01-01 10:00:20", "doc one text"),   # still in horizon → dropped
-    ]
-    src = spark.createDataFrame(rows, "ts_s string, text string").select(
-        F.col("ts_s").cast("timestamp").alias("ts"), "text"
-    )
-    data_dir = tmp_path / "docs_in"
-    src.coalesce(1).write.mode("overwrite").parquet(str(data_dir))
-    stream = spark.readStream.schema(src.schema).parquet(str(data_dir))
-    spark.sql("DROP TABLE IF EXISTS dedup_out")
-    q = (
-        streaming_exact_dedup(stream, "ts", watermark="1 hour")
-        .writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        rows_out = _await_rows(spark, "dedup_out", 2)
-        assert sorted(r["text"] for r in rows_out) == ["doc one text", "doc two text"]
-        assert len(rows_out) == 2
-    finally:
-        q.stop()
-
-
 def test_streaming_pii_scrub_stateless_parity(spark):
     """PII scrubbing is stateless column algebra, so the SAME pii_scrub
     expression drops into a readStream→writeStream pipeline unchanged —
@@ -467,71 +433,6 @@ def test_falling_behind_scoped_per_query():
     assert not falling_behind(rec, 1000, window=4, query_id="fast")
     # pooled (legacy) call would have been masked by the fast stream
     assert not falling_behind(rec, 1000, window=4)
-
-
-def test_streaming_rolling_zscore_matches_batch(spark, tmp_path):
-    """Streaming twin parity: the stateful trailing-window z-score must
-    reproduce the batch rolling_zscore flags across TWO micro-batches
-    (state carries the window over the batch boundary)."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from spark_streaming_kafka_spark.operators.windows import rolling_zscore
-    from spark_streaming_kafka_spark.streaming.anomaly import (
-        streaming_rolling_zscore,
-    )
-
-    rows = [
-        (i, "m", 1000 + i, 10.0 + (0.5 if i % 2 else -0.5))
-        for i in range(21)
-    ]
-    rows.append((21, "m", 1021, 100.0))  # spike lands in micro-batch 2
-    schema = "event_id long, event_type string, ts_ms long, value double"
-    full = spark.createDataFrame(rows, schema)
-
-    expected = {
-        r.event_id: (r.zscore, r.is_anomaly)
-        for r in rolling_zscore(
-            full,
-            "value",
-            ["event_type"],
-            [F.col("ts_ms").asc(), F.col("event_id").asc()],
-            window=20,
-            threshold=3.0,
-        ).collect()
-    }
-
-    data_dir = tmp_path / "anomaly_in"
-    spark.createDataFrame(rows[:15], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(data_dir))
-    _time.sleep(1.1)  # distinct mtimes → deterministic batch order
-    spark.createDataFrame(rows[15:], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(data_dir))
-
-    stream = (
-        spark.readStream.schema(full.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(data_dir))
-    )
-    spark.sql("DROP TABLE IF EXISTS anomaly_out")
-    q = (
-        streaming_rolling_zscore(stream)
-        .writeStream.format("memory")
-        .queryName("anomaly_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "anomaly_ckpt"))
-        .start()
-    )
-    try:
-        got_rows = _await_rows(spark, "anomaly_out", len(rows))
-        got = {r.event_id: (r.zscore, r.is_anomaly) for r in got_rows}
-        assert got == expected
-        assert got[21][1] is True  # the spike is flagged in batch 2
-    finally:
-        q.stop()
 
 
 def test_transition_stream_pairs_match_batch(spark, tmp_path):

@@ -102,13 +102,13 @@ def test_shipped_afinn_lexicon_scores_lyrics(spark):
     Arrow-batched UDF rather than driver pandas."""
     from spark_streaming_kafka_spark.functions.text import (
         default_afinn_path,
-        load_default_afinn,
+        load_afinn_lexicon,
         make_sentiment_udf,
     )
     import os
 
     assert os.path.exists(default_afinn_path())
-    lex = load_default_afinn()
+    lex = load_afinn_lexicon(default_afinn_path())
     assert len(lex) > 500
     assert all(isinstance(v, int) and -5 <= v <= 5 for v in lex.values())
     assert any(" " in term for term in lex)  # multi-word phrases present
@@ -169,42 +169,3 @@ def test_logistic_quality_frozen_scorer_separates(spark):
     }
     assert out[1] > 0.5 > out[2]
 
-
-def test_trained_quality_classifier_agrees_with_frozen_gate(spark):
-    """The production pyspark.ml path: train on labeled exemplars,
-    score held-out docs, and agree with the frozen-weight gate on the
-    obvious cases."""
-    from pyspark.sql import functions as F
-
-    from spark_streaming_kafka_spark.operators.quality_clf import (
-        score_quality_model,
-        train_quality_classifier,
-    )
-
-    goods = [
-        f"the number {i} is on the list of things to do in the morning and the evening"
-        for i in range(30)
-    ]
-    bads = [f"@@{i}@@ ### !!! $$$ %% ^^ && ** (( ))" for i in range(30)]
-    labeled = spark.createDataFrame(
-        [(i, t, 1) for i, t in enumerate(goods)]
-        + [(100 + i, t, 0) for i, t in enumerate(bads)],
-        "doc_id long, text string, label int",
-    )
-    model = train_quality_classifier(labeled)
-
-    held = spark.createDataFrame(
-        [
-            (900, "a walk in the park is one of the things we like to do"),
-            (901, "%% !! @@ ## ^^ && ** ~~ ``"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r for r in score_quality_model(model, held).collect()}
-    assert got[900]["keep"] and got[900]["prob"] > 0.5
-    assert not got[901]["keep"] and got[901]["prob"] < 0.5
-
-    # determinism: refit on identical data reproduces identical scores
-    model2 = train_quality_classifier(labeled)
-    got2 = {r["doc_id"]: r["prob"] for r in score_quality_model(model2, held).collect()}
-    assert got2 == {k: v["prob"] for k, v in got.items()}
