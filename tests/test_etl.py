@@ -27,21 +27,30 @@ def test_min_listen_filter(triplets):
     assert out.filter(F.col("listen_count") < 2).count() == 0
 
 
+def test_active_user_filter(triplets):
+    """Only userA survives the active-user step (userB's total is
+    5 < 20); a catalog of 200 keeps every song, so no user is lost to
+    the catalog cut."""
+    out = etl.build_ratings(triplets, min_count=2, min_total=20, catalog_size=200)
+    users = {r["user_id"] for r in out.select("user_id").distinct().collect()}
+    assert users == {"userA"}
+
+
+def test_bucket_levels_match_pandas_quantiles(triplets):
+    """userA counts 2..10: pandas quantiles(.2/.4/.6/.8) = 3.6/5.2/6.8/8.4
+    → levels: 2,3→1; 4,5→2; 6→3; 7,8→4; 9,10→5 (>= boundaries).
+    userA's song S<i> has i listens."""
+    out = etl.build_ratings(triplets, min_count=2, min_total=20, catalog_size=200)
+    levels = {int(r["song_id"][1:]): r["rating"] for r in out.collect()}
+    assert levels == {2: 1.0, 3: 1.0, 4: 2.0, 5: 2.0, 6: 3.0, 7: 4.0, 8: 4.0, 9: 5.0, 10: 5.0}
+
+
 def test_build_ratings_end_to_end(triplets):
     out = etl.build_ratings(triplets, min_count=2, min_total=20, catalog_size=5).collect()
     songs = {r["song_id"] for r in out}
     # top-5 songs by listens among cleaned rows: S06..S10
     assert songs == {"S06", "S07", "S08", "S09", "S10"}
     assert all(1.0 <= r["rating"] <= 5.0 for r in out)
-
-    # A catalog that keeps every song: only userA survives the active-user
-    # filter (userB's total is 5 < 20), and its counts 2..10 bucket by
-    # pandas quantiles(.2/.4/.6/.8) = 3.6/5.2/6.8/8.4 → 2,3→1; 4,5→2;
-    # 6→3; 7,8→4; 9,10→5 (>= boundaries). userA's song S<i> has i listens.
-    out = etl.build_ratings(triplets, min_count=2, min_total=20, catalog_size=200).collect()
-    assert {r["user_id"] for r in out} == {"userA"}
-    levels = {int(r["song_id"][1:]): r["rating"] for r in out}
-    assert levels == {2: 1.0, 3: 1.0, 4: 2.0, 5: 2.0, 6: 3.0, 7: 4.0, 8: 4.0, 9: 5.0, 10: 5.0}
 
 
 def test_ratings_sql_twin_matches_build_ratings(spark):
