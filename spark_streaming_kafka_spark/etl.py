@@ -127,7 +127,6 @@ def build_ratings(
     min_total: int = 20,
     catalog_size: int = 200,
     probs: tuple[float, ...] = (0.2, 0.4, 0.6, 0.8),
-    broadcast_users: bool = True,
 ) -> DataFrame:
     """Full pipeline → (user_id, song_id, rating) restricted to the
     top-catalog (#cell16's 168,861-row shape on MSD input).
@@ -157,11 +156,9 @@ def build_ratings(
     scale the fixed cost vanishes into per-wave data cost — the regime
     this plan is shaped for.
 
-    ``broadcast_users``: the per-user row is ~50 bytes (id + 4 doubles);
-    a bounded user base (the reference's MSD corpus: ~1M users ⇒ ~50 MB)
-    broadcasts safely and turns both fact-side joins into shuffle-free
-    map joins. Set False for unbounded key spaces — the sort-merge join
-    degrades gracefully.
+    The per-user row is ~50 bytes (id + 4 doubles); a bounded user base
+    (the reference's MSD corpus: ~1M users ⇒ ~50 MB) broadcasts safely
+    and turns both fact-side joins into shuffle-free map joins.
     """
     f1 = filter_min_listens(triplets, min_count)
     arr = ", ".join(str(p) for p in probs)
@@ -181,9 +178,7 @@ def build_ratings(
     # job barrier the checkpoint cost (measured ~20% of the query at
     # sf0.1). Exchange reuse survives on a cluster; checkpoint blocks
     # die with their executor.
-    if broadcast_users:
-        active = F.broadcast(active)
-    f2 = f1.join(active, "user_id")  # filter + quantile boundaries in one
+    f2 = f1.join(F.broadcast(active), "user_id")  # filter + quantile boundaries in one
     v = F.col("listen_count")
     chain = F.when(v >= F.col(f"__q{n-1}"), F.lit(float(n + 1)))
     for i in range(n - 2, -1, -1):

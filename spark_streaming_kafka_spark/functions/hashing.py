@@ -11,9 +11,7 @@ both engines with identical output, so the portable primitive is:
 15 hex digits keep the value comfortably inside a signed 64-bit range in
 both engines (DuckDB: ``('0x' || substr(md5(s),1,15))::BIGINT``).
 
-At 100 TB scale md5-per-token is still JVM-native and vectorizable by
-whole-stage codegen; swap to ``xxhash64`` via ``fast=True`` when oracle
-portability is not required (same downstream algebra, ~3× cheaper).
+md5-per-token stays JVM-native and vectorizable by whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -25,12 +23,9 @@ from pyspark.sql import functions as F
 MERSENNE_P = 2147483647  # 2^31 - 1
 
 
-def md5_long(col: Column | str, fast: bool = False) -> Column:
+def md5_long(col: Column | str) -> Column:
     """Portable 60-bit non-negative integer hash of a string column."""
     c = F.col(col) if isinstance(col, str) else col
-    if fast:
-        # Non-portable fast path: xxhash64, masked non-negative.
-        return F.abs(F.xxhash64(c))
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 

@@ -926,9 +926,7 @@ def quantile_treatment_effect(
 
     One per-arm exact-percentile aggregation (the engine's shared
     linear-interpolation form), then a 2-row pivot — output one row
-    per probe: ``(prob, q_0, q_1, qte)``, round-6. For 100 TB swap
-    ``exact=False`` semantics by pre-sketching with
-    ``percentile_approx`` upstream; the shape is unchanged.
+    per probe: ``(prob, q_0, q_1, qte)``, round-6.
     """
     plist = ", ".join(repr(float(p)) for p in probs)
     g = df.select(

@@ -77,7 +77,6 @@ def upsert(
     base: DataFrame,
     updates: DataFrame,
     key: str,
-    broadcast_updates: bool = True,
 ) -> DataFrame:
     """MERGE without a table format: rows from ``updates`` replace
     same-key rows of ``base`` whole-row; new keys append; all other
@@ -93,15 +92,8 @@ def upsert(
     nightly merge requires. (Whole-row replacement falls out for free:
     superseded base rows are gone, so no per-column coalesce can
     resurrect their values.)
-
-    ``broadcast_updates=False`` drops the explicit hint for the rare
-    snapshot-sized update set (the anti-join then shuffles both key
-    sets; correctness is identical).
     """
-    keys = updates.select(key)
-    if broadcast_updates:
-        keys = F.broadcast(keys)
-    survivors = base.join(keys, key, "left_anti")
+    survivors = base.join(F.broadcast(updates.select(key)), key, "left_anti")
     return survivors.unionByName(updates.select(*base.columns))
 
 

@@ -14,8 +14,7 @@ Five escalating strategies over a ``documents(doc_id, text, ...)`` table:
   vectors (semantic near-dup).
 
 All hashing uses the engine-portable ``md5_long`` (functions/hashing.py)
-so the DuckDB oracle reproduces results exactly; swap ``fast=True`` →
-``xxhash64`` in production where no external verifier must agree.
+so the DuckDB oracle reproduces results exactly.
 
 Scale analysis (the reason each exists):
   exact       O(n) + one shuffle on text-hash.
@@ -36,7 +35,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import IntegralType, StructField, StructType
 
 from ..functions.hashing import MERSENNE_P, md5_long
 from .skew import fan_out
@@ -61,10 +60,9 @@ def minhash_params(num_perm: int, seed: int = _MINHASH_SEED) -> list[tuple[int, 
     return params
 
 
-def tokenize(text: Column, lowercase: bool = False) -> Column:
+def tokenize(text: Column) -> Column:
     """Whitespace tokens, empties dropped."""
-    t = F.lower(text) if lowercase else text
-    return F.filter(F.split(t, " "), lambda x: x != "")
+    return F.filter(F.split(text, " "), lambda x: x != "")
 
 
 def word_shingles(text: Column, k: int = 3, distinct: bool = True) -> Column:
@@ -1051,7 +1049,6 @@ def dedup_clusters(
     text_col: str = "text",
     id_col: str = "doc_id",
     candidates: str = "minhash",
-    max_df: int | None = None,
     num_perm: int = 32,
     bands: int = 16,
 ) -> DataFrame:
@@ -1067,18 +1064,16 @@ def dedup_clusters(
       volume is ≈ true-pair volume — sub-quadratic by construction.
       A stop-shingle shared by 1M docs contributes nothing unless the
       band signatures also collide.
-    - ``"exact"`` — the inverted-index self-join, optionally capped with
-      ``max_df``. Unbounded (``max_df=None``) is only safe as a small-
-      corpus oracle/verifier; its join volume is Σ_shingle df².
+    - ``"exact"`` — the uncapped inverted-index self-join, only safe
+      as a small-corpus oracle/verifier; its join volume is
+      Σ_shingle df².
     """
     if candidates == "minhash":
         pairs = minhash_lsh_pairs(
             docs, threshold, num_perm, bands, k, text_col, id_col, verify=True
         )
     elif candidates == "exact":
-        pairs = ngram_jaccard_pairs(
-            docs, threshold, k, text_col, id_col, max_df=max_df
-        )
+        pairs = ngram_jaccard_pairs(docs, threshold, k, text_col, id_col)
     else:
         raise ValueError(f"unknown candidates strategy: {candidates!r}")
     cc = connected_components(pairs.select("id_a", "id_b"))
@@ -1376,8 +1371,15 @@ def embedding_near_dup_pairs(
       O(n·rotations) vector rows, never O(n²) pairs.
 
     Force a path with ``exact_below=0`` (always bucketed) or a huge
-    value (always exact).
+    value (always exact). ``id_col`` must be an integral column: both
+    paths score ids as longs.
     """
+    id_type = emb.schema[id_col].dataType
+    if not isinstance(id_type, IntegralType):
+        raise ValueError(
+            f"embedding_near_dup_pairs: id column {id_col!r} is "
+            f"{id_type.simpleString()}, not an integral type"
+        )
     if exact_below > 0 and emb.count() <= exact_below:
         # Exact all-pairs as ONE degenerate LSH bucket (r12): the former
         # ``id_a < id_b`` theta-join planned a BroadcastNestedLoopJoin

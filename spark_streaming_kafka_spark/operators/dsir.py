@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import md5_long
 from .dedup import tokenize
 
-__all__ = ["dsir_bucket_logratios", "dsir_weights", "dsir_select_topk"]
+__all__ = ["dsir_weights", "dsir_select_topk"]
 
 
 def _bucketed_tokens(
@@ -57,15 +57,8 @@ def _bucketed_tokens(
     return tok.withColumn("b", (md5_long(F.col("term")) % F.lit(buckets)).cast("int"))
 
 
-def dsir_bucket_logratios(
-    target: DataFrame,
-    raw: DataFrame,
-    buckets: int = 4096,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Fit the two hashed-unigram models and return the per-bucket
-    log importance ratio table: (b, lam) with
+def _logratios_from_counts(ct: DataFrame, cs: DataFrame, buckets: int) -> DataFrame:
+    """Bucket count tables → the per-bucket log importance ratio (b, lam):
 
         lam(b) = ln( (ct(b)+1) * (Ns+B)  /  ((cs(b)+1) * (Nt+B)) )
 
@@ -77,22 +70,7 @@ def dsir_bucket_logratios(
     and beyond that it rounds gracefully instead of wrapping the way a
     64-bit integer product would past 2^63 (~3e9 tokens/side with the
     default 4096 buckets). The output has at most ``buckets`` rows —
-    broadcastable by construction."""
-    ct = (
-        _bucketed_tokens(target, text_col, id_col, buckets)
-        .groupBy("b")
-        .agg(F.count(F.lit(1)).alias("ct"))
-    )
-    cs = (
-        _bucketed_tokens(raw, text_col, id_col, buckets)
-        .groupBy("b")
-        .agg(F.count(F.lit(1)).alias("cs"))
-    )
-    return _logratios_from_counts(ct, cs, buckets)
-
-
-def _logratios_from_counts(ct: DataFrame, cs: DataFrame, buckets: int) -> DataFrame:
-    """Shared estimator tail: bucket count tables → (b, lam).
+    broadcastable by construction.
 
     Totals Nt/Ns come from an unpartitioned window over the joined
     ≤``buckets``-row table (one trivial single-partition pass), NOT

@@ -15,9 +15,8 @@ to a 1–5 level with an if/elif chain. Two rebuild variants:
   equal values across buckets; the reference gives equal values equal
   levels). Ship A for parity, B for speed.
 
-At 100 TB: both are one shuffle by group key. A's quantile state is
-O(distinct values) per group — switch ``exact=False`` (t-digest sketch,
-``percentile_approx``) when groups are huge; B is always O(1) state.
+Both are one shuffle by group key. A's quantile state is O(distinct
+values) per group; B is always O(1) state.
 """
 
 from __future__ import annotations
@@ -33,13 +32,11 @@ def group_quantiles(
     group: str,
     value: str,
     probs: Sequence[float] = (0.2, 0.4, 0.6, 0.8),
-    exact: bool = True,
 ) -> DataFrame:
     """Per-group quantile vector (A6). Columns: group, q0..q{n-1}."""
-    fn = "percentile" if exact else "percentile_approx"
     arr = ", ".join(str(p) for p in probs)
     qdf = df.groupBy(group).agg(
-        F.expr(f"{fn}({value}, array({arr}))").alias("__qs")
+        F.expr(f"percentile({value}, array({arr}))").alias("__qs")
     )
     cols = [F.col(group)] + [
         F.col("__qs").getItem(i).alias(f"q{i}") for i in range(len(probs))
@@ -53,7 +50,6 @@ def quantile_buckets(
     value: str,
     probs: Sequence[float] = (0.2, 0.4, 0.6, 0.8),
     out: str = "level",
-    exact: bool = True,
 ) -> DataFrame:
     """Option A: label each row 1..len(probs)+1 by where ``value`` falls
     among its group's quantiles (``>=`` upper boundaries first, matching
@@ -65,7 +61,7 @@ def quantile_buckets(
     already ran). The group count must stay bounded: the reference's
     user base (~1M users) is ~40 MB of boundaries, while billions of
     groups would fail the broadcast."""
-    qs = F.broadcast(group_quantiles(df, group, value, probs, exact))
+    qs = F.broadcast(group_quantiles(df, group, value, probs))
     joined = df.join(qs, group)
     v = F.col(value)
     n = len(probs)

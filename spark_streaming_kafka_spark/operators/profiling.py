@@ -13,9 +13,6 @@ Scale notes:
   per column). Multiple ``count(distinct ...)`` in one agg plan via
   Catalyst's Expand: the scan is read once and replicated
   per-distinct-column map-side — one job regardless of column count.
-  For 100 TB profiles swap exact distincts for
-  ``approx_count_distinct`` (HyperLogLog++, no Expand blow-up) — same
-  call, ``exact=False``.
 - :func:`grouped_trend` is a pure hash aggregation: the least-squares
   slope comes from the explicit-sums identity
   ``slope = (n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²)`` so both this engine
@@ -30,21 +27,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def column_profile(
-    df: DataFrame, cols: list[str] | None = None, exact: bool = True
-) -> DataFrame:
+def column_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Long-format per-column profile: one row per column with
     ``(column, n_rows, n_nulls, n_distinct)``.
 
     One aggregation job: all per-column stats evaluate in a single
-    ``agg`` (Expand-based multi-distinct when ``exact``), then the
-    single result row is unpivoted executor-side with ``stack`` — no
-    driver collect, no per-column jobs.
-
-    ``exact=False`` switches distinct counts to HyperLogLog++
-    (``approx_count_distinct``) — the 100 TB default, where an exact
-    multi-column distinct's Expand multiplies scan rows by the column
-    count. NULLs are excluded from distinct counts in both modes (SQL
+    ``agg`` (Expand-based multi-distinct), then the single result row
+    is unpivoted executor-side with ``stack`` — no driver collect, no
+    per-column jobs. NULLs are excluded from distinct counts (SQL
     semantics, matched by DuckDB's ``count(DISTINCT col)``).
     """
     cols = cols or df.columns
@@ -56,17 +46,12 @@ def column_profile(
     def ref(c: str):
         return F.col("`" + c.replace("`", "``") + "`")
 
-    distinct = (
-        (lambda c: F.count_distinct(ref(c)))
-        if exact
-        else (lambda c: F.approx_count_distinct(ref(c)))
-    )
     aggs = [F.count(F.lit(1)).alias("__n")]
     for i, c in enumerate(cols):
         aggs.append(
             F.count(F.when(ref(c).isNull(), F.lit(1))).alias(f"__nulls_{i}")
         )
-        aggs.append(distinct(c).alias(f"__dist_{i}"))
+        aggs.append(F.count_distinct(ref(c)).alias(f"__dist_{i}"))
     one = df.agg(*aggs)
     stack_args = ", ".join(
         "'{lit}', __nulls_{i}, __dist_{i}".format(

@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 def join_facts_to_dims(
     fact: DataFrame,
     dims: Sequence[tuple[DataFrame, str | list[str]]],
-    select: Sequence[Column | str] | None = None,
 ) -> DataFrame:
     """N-way fact⋈dim join with every dim broadcast (J1/J2/J5 class;
     reference chained RDD joins at ``engine.py:45``).
@@ -48,8 +47,6 @@ def join_facts_to_dims(
     out = fact
     for dim, keys in dims:
         out = out.join(F.broadcast(dim), keys)
-    if select is not None:
-        out = out.select(*select)
     return out
 
 
@@ -112,17 +109,12 @@ def word_count(df: DataFrame, text_col: str = "value", sep: str = " ") -> DataFr
     )
 
 
-def quantiles(
-    df: DataFrame, value: str, probs: Sequence[float], exact: bool = True
-) -> DataFrame:
-    """Global quantiles (A6/F7). ``exact=True`` matches the reference's
-    pandas linear-interpolation semantics via ``percentile``; flip to
-    ``percentile_approx`` at extreme scale where a t-digest sketch is the
-    right trade (bounded memory, mergeable across partitions)."""
-    fn = "percentile" if exact else "percentile_approx"
+def quantiles(df: DataFrame, value: str, probs: Sequence[float]) -> DataFrame:
+    """Global quantiles (A6/F7): the reference's pandas
+    linear-interpolation semantics via ``percentile``."""
     return df.select(
         F.expr(
-            f"{fn}({value}, array({', '.join(str(p) for p in probs)}))"
+            f"percentile({value}, array({', '.join(str(p) for p in probs)}))"
         ).alias("quantiles")
     )
 

@@ -13,9 +13,9 @@ Two tiers:
 
 - :func:`ivf_topk` — IVF cells: assign every vector to its nearest
   codebook centroid (:func:`ivf_assign`, shuffle-free column algebra),
-  probe only the ``nprobe`` nearest cells per query. The scale path for
-  100 TB vector volumes; codebook pluggable (deterministic sample here,
-  ``pyspark.ml.clustering.KMeans`` in production).
+  probe only the ``nprobe`` nearest cells per query. Codebook
+  pluggable: the deterministic sample by default, or a trained list
+  (:func:`kmeans_codebook`, :func:`lloyd_codebook_fixed`).
 
 Vector math here deliberately lives in Arrow + BLAS (``mapInPandas`` /
 ``applyInPandas``), not Catalyst expressions: per-element higher-order
@@ -538,11 +538,11 @@ def ivf_topk(
     """IVF-style ANN: partition the corpus into ``n_centroids`` cells,
     then answer each query by scoring only the ``nprobe`` nearest cells.
 
-    ``codebook`` selects centroid training: ``"sample"`` (default) takes
-    the vectors with the ``n_centroids`` lowest ids — deterministic and
-    SQL-reproducible, which is what the oracle checks; ``"kmeans"`` runs
-    :func:`kmeans_codebook` (real distributed Lloyd's — the production
-    choice); or pass a pre-trained ``[(cid, components), ...]`` directly.
+    ``codebook``: ``"sample"`` (default) takes the vectors with the
+    ``n_centroids`` lowest ids — deterministic and SQL-reproducible,
+    which is what the oracle checks; or pass a trained
+    ``[(cid, components), ...]`` directly (e.g. from
+    :func:`kmeans_codebook` or :func:`lloyd_codebook_fixed`).
     Everything after the codebook is identical. Collecting the codebook
     is a bounded driver transfer (n_centroids·dim floats), the same way
     a trained model ships to executors.
@@ -573,11 +573,10 @@ def ivf_topk(
         ]
         centroids = [(i, v) for i, v in pool if i < n_centroids]
         qrows = [(i, v) for i, v in pool if i < n_queries]
+    elif isinstance(codebook, str):
+        raise ValueError(f"unknown codebook {codebook!r}: pass 'sample' or a trained list")
     else:
-        if codebook == "kmeans":
-            centroids = kmeans_codebook(emb, n_centroids, vec_col)
-        else:
-            centroids = codebook
+        centroids = codebook
         qrows = [
             (int(r[0]), list(r[1]))
             for r in emb.filter(F.col(id_col) < n_queries)
@@ -706,13 +705,25 @@ def centroid_similarity(
     )
 
 
+def _sample_codebook(
+    emb: DataFrame, n_centroids: int, id_col: str, vec_col: str
+) -> list[tuple[int, list[float]]]:
+    """:func:`ivf_topk`'s "sample" codebook: the vectors with the
+    ``n_centroids`` lowest ids, collected as ``[(cid, components)]``."""
+    return [
+        (int(r[0]), list(r[1]))
+        for r in emb.filter(F.col(id_col) < n_centroids)
+        .select(id_col, vec_col)
+        .collect()
+    ]
+
+
 def diversity_sample(
     emb: DataFrame,
     per_cluster: int = 32,
     n_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    codebook: str | list[tuple[int, list[float]]] = "sample",
 ) -> DataFrame:
     """Cluster-balanced diversity sampling — the cluster-then-sample
     curation move (SemDeDup-family, Abbas et al. 2023): K-cluster the
@@ -728,10 +739,9 @@ def diversity_sample(
     (broadcast codebook, one BLAS matmul per Arrow batch — see
     :func:`ivf_assign`); the only shuffle is the per-cluster top-k
     window over (id, cluster_id, centrality) rows — ~16 bytes/vector,
-    never the vectors themselves. ``codebook`` as in :func:`ivf_topk`:
-    "sample" (deterministic lowest-id vectors — SQL-reproducible, what
-    the oracle pins), "kmeans" (real distributed Lloyd's), or a
-    pre-trained list.
+    never the vectors themselves. The codebook is :func:`ivf_topk`'s
+    "sample" one (deterministic lowest-id vectors — SQL-reproducible,
+    what the oracle pins).
     """
     from collections.abc import Iterator
 
@@ -739,18 +749,7 @@ def diversity_sample(
 
     from pyspark.sql import Window
 
-    if codebook == "sample":
-        centroids = [
-            (int(r[0]), list(r[1]))
-            for r in emb.filter(F.col(id_col) < n_centroids)
-            .select(id_col, vec_col)
-            .collect()
-        ]
-    elif codebook == "kmeans":
-        centroids = kmeans_codebook(emb, n_centroids, vec_col)
-    else:
-        centroids = codebook
-    cids, sims = _codebook_sims(centroids)
+    cids, sims = _codebook_sims(_sample_codebook(emb, n_centroids, id_col, vec_col))
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -790,7 +789,6 @@ def semdedup_prune(
     n_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    codebook: str | list[tuple[int, list[float]]] = "sample",
 ) -> DataFrame:
     """SemDeDup-style semantic pruning (Abbas et al. 2023): cluster the
     embedding space, then WITHIN each cluster prune every vector that
@@ -816,18 +814,7 @@ def semdedup_prune(
 
     import numpy as np
 
-    if codebook == "sample":
-        centroids = [
-            (int(r[0]), list(r[1]))
-            for r in emb.filter(F.col(id_col) < n_centroids)
-            .select(id_col, vec_col)
-            .collect()
-        ]
-    elif codebook == "kmeans":
-        centroids = kmeans_codebook(emb, n_centroids, vec_col)
-    else:
-        centroids = codebook
-    cids, sims = _codebook_sims(centroids)
+    cids, sims = _codebook_sims(_sample_codebook(emb, n_centroids, id_col, vec_col))
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -25,10 +25,8 @@ The result is partitioning-invariant (the frontier is a property of
 the point SET), needs no window over an unpartitioned sort (the
 single-node trap of the cummax-window formulation), and shuffles only
 candidates. Worst case — input already sorted along one objective so
-every partition keeps everything — degrades to the single-sort cost,
-and is the adversarial layout a range-partitioned lakehouse table
-would hand you; randomizing with a round-robin ``repartition`` first
-is the documented escape hatch (``prepartition=True``).
+every partition keeps everything — degrades to the single-sort cost
+and stays exact.
 
 Dominance here is WEAK maximization on two objectives: ``b`` dominates
 ``a`` iff ``b.x >= a.x`` and ``b.y >= a.y`` and they differ in at
@@ -72,15 +70,13 @@ def skyline_2d(
     x_col: str,
     y_col: str,
     *,
-    prepartition: bool = False,
     candidate_guard: int | None = None,
 ) -> DataFrame:
     """Rows of ``df`` on the 2-D Pareto frontier (maximize both columns).
 
     NULL in either objective never reaches the frontier (incomparable
     under dominance) and is filtered up front. All other columns ride
-    along unchanged. Set ``prepartition`` when the input layout is
-    sorted/range-clustered along an objective (see module docstring).
+    along unchanged.
 
     Memory: each phase folds Arrow batches INCREMENTALLY — the running
     frontier is re-pruned against every batch, so a task holds at most
@@ -94,8 +90,6 @@ def skyline_2d(
     funnelling N+ rows into a single task.
     """
     clean = df.filter(df[x_col].isNotNull() & df[y_col].isNotNull())
-    if prepartition:
-        clean = clean.repartition(clean.sparkSession.sparkContext.defaultParallelism)
     schema = clean.schema
 
     def local(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:

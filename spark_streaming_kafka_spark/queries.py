@@ -648,7 +648,7 @@ def q_order_gap_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6/F7 — exact per-group quantiles (linear interpolation, matching
-    pandas/DuckDB); percentile_approx is the 100-TB switch."""
+    pandas/DuckDB)."""
     ev = _t(spark, sf_dir, "events")
     qs = group_quantiles(ev, "event_type", "value", (0.25, 0.5, 0.75))
     return qs.select(
@@ -3232,8 +3232,7 @@ def q_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     mix. All columns' stats evaluate in a SINGLE aggregation (Expand
     multi-distinct), then the 1-row result unpivots executor-side with
     ``stack``: one job for any column count, vs the oracle's one scan
-    per column. ``exact=False`` switches to HLL++ for the 100 TB path
-    (operators/profiling.py::column_profile)."""
+    per column (operators/profiling.py::column_profile)."""
     from .operators.profiling import column_profile
 
     return column_profile(

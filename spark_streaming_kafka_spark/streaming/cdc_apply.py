@@ -16,11 +16,12 @@ the streaming concerns a nightly/continuous changefeed adds:
   replay rewrites its own snapshot and re-points the same pointer —
   exactly-once output without a log.
 
-Scale note: each version rewrites the full base, which is correct and
-simple but write-amplified; at 100 TB the same sink composes with
-:func:`..operators.cdc.snapshot_diff` partition pruning (rewrite only
-partitions containing changed keys) — the pointer-swap mechanics are
-identical, so that upgrade is local to the write step.
+Scale note: the merge broadcasts the batch's key set (see
+:func:`..operators.cdc.upsert`), so the base never shuffles; each
+version still rewrites the full base, which is correct and simple but
+write-amplified. Rewriting only partitions containing changed keys
+(:func:`..operators.cdc.snapshot_diff`) keeps the pointer-swap
+mechanics, so that upgrade is local to the write step.
 """
 
 from __future__ import annotations
@@ -140,18 +141,13 @@ def cdc_upsert_sink(
     base_path: str,
     key: str,
     order_col: str,
-    broadcast_updates: bool = True,
     keep_versions: int = 2,
 ):
     """foreachBatch handler: collapse the batch to latest-per-key,
     upsert into the current snapshot, publish as the next version,
     prune superseded versions.
 
-    ``broadcast_updates=False`` for feeds whose batches can be
-    snapshot-sized (backfills, startingOffsets=earliest catch-up) —
-    a forced broadcast of a huge key set fails the query at Spark's
-    8 GB broadcast limit, while the unhinted anti-join degrades
-    gracefully. ``keep_versions`` bounds storage: each publish retains
+    ``keep_versions`` bounds storage: each publish retains
     that many committed snapshots (≥1; the pointer target is never
     deleted) — without pruning a 1 s-trigger stream writes a full base
     copy per batch forever. Keep ≥2 so a reader that resolved the
@@ -189,11 +185,7 @@ def cdc_upsert_sink(
                 )
         delta = latest_per_key(batch, key, order_col)
         base = current_snapshot(spark, base_path)
-        merged = (
-            delta
-            if base is None
-            else upsert(base, delta, key, broadcast_updates=broadcast_updates)
-        )
+        merged = delta if base is None else upsert(base, delta, key)
         merged.write.mode("overwrite").parquet(f"{base_path}/{version}")
         _write_pointer(spark, base_path, version)
         prune_versions(spark, base_path, keep_versions)

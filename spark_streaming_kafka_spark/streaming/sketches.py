@@ -118,7 +118,6 @@ def kmv_stream_monitor(
     key_col: str,
     group_cols: list[str],
     k: int = 256,
-    emit_hashes: bool = False,
 ):
     """Streaming KMV (bottom-k theta) monitor — the set-operation
     member's streaming twin, completing the monitor family (distinct =
@@ -136,15 +135,6 @@ def kmv_stream_monitor(
     directly. Hashing uses the same md5-prefix-15 integer as
     ``functions.hashing.md5_long`` — parity with the batch operator is
     pinned by test.
-
-    ``emit_hashes=True`` makes the "the state IS a sketch" claim
-    operational (r8): each emitted row carries the retained bottom-k
-    hash array (``hs array<long>``, ≤ 8·k bytes), so a sink can
-    ``explode`` the latest row per group into the (group..., pos, h)
-    table the batch set-operation estimators consume — cross-stream
-    overlap, stream-vs-batch Jaccard, day rollups via
-    :func:`..operators.sketches.kmv_merge` — without touching the
-    state store. Pinned by test against the batch estimators.
     """
     import hashlib
     from decimal import ROUND_HALF_UP, Decimal
@@ -159,7 +149,6 @@ def kmv_stream_monitor(
     out_schema = (
         ", ".join(f"{g} {in_types[g]}" for g in group_cols)
         + ", kmv_distinct double, n_hashes int"
-        + (", hs array<long>" if emit_hashes else "")
     )
 
     def fn(keygrp, pdfs, state):
@@ -181,14 +170,13 @@ def kmv_stream_monitor(
             est = float(
                 Decimal(repr(raw)).quantize(Decimal("0.01"), rounding=ROUND_HALF_UP)
             )
-        out = {
-            **{g: [keygrp[i]] for i, g in enumerate(group_cols)},
-            "kmv_distinct": [est],
-            "n_hashes": [len(bottom)],
-        }
-        if emit_hashes:
-            out["hs"] = pd.Series([list(bottom)], dtype="object")
-        yield pd.DataFrame(out)
+        yield pd.DataFrame(
+            {
+                **{g: [keygrp[i]] for i, g in enumerate(group_cols)},
+                "kmv_distinct": [est],
+                "n_hashes": [len(bottom)],
+            }
+        )
 
     return stream.groupBy(*group_cols).applyInPandasWithState(
         fn,

@@ -498,8 +498,7 @@ def test_ses_forecast_partition_invariant(spark, tables):
 
 def test_skyline_exact_on_adversarial_sorted_layout(spark):
     """A layout range-clustered along one objective (every partition's
-    local skyline stays large) must still produce the exact frontier;
-    prepartition=True is the perf escape hatch, same answer."""
+    local skyline stays large) must still produce the exact frontier."""
     rng = random.Random(99)
     pts = [(i, float(rng.randint(0, 40))) for i in range(120)]
     df = (
@@ -510,11 +509,7 @@ def test_skyline_exact_on_adversarial_sorted_layout(spark):
     )
     expect = sorted(_py_skyline(pts))
     a = sorted((r["x"], r["y"]) for r in skyline_2d(df, "x", "y").collect())
-    b = sorted(
-        (r["x"], r["y"])
-        for r in skyline_2d(df, "x", "y", prepartition=True).collect()
-    )
-    assert a == expect and b == expect
+    assert a == expect
 
 
 # --- growth accounting ----------------------------------------------------

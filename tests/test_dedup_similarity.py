@@ -235,12 +235,27 @@ def test_embedding_near_dup_repeated_ids_emit_no_self_pairs(spark):
         assert pairs == {(3, 7)}, (exact_below, pairs)
 
 
+def test_embedding_near_dup_rejects_non_integral_ids(spark):
+    """A string id would become NULL under the exact path's long cast
+    and fail inside Arrow on the bucketed path: both paths reject it
+    from the schema, before the size gate's count starts a job."""
+    vecs = spark.createDataFrame(
+        [("a", [1.0, 0.0]), ("b", [1.0, 0.0])], "vec_id string, embedding array<double>"
+    )
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    for exact_below in (50_000, 0):
+        with pytest.raises(ValueError, match="'vec_id' is string"):
+            dd.embedding_near_dup_pairs(vecs, exact_below=exact_below, dim=2)
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+
 def test_ivf_kmeans_codebook_recall(spark, emb):
     """IVF with a REAL KMeans codebook (the production path the
     deterministic sample stands in for): k rows per query, and recall
-    vs exact brute-force stays useful at nprobe=4/16."""
+    vs exact brute-force stays useful at nprobe=4/8."""
     ivf = sim.ivf_topk(emb, n_centroids=8, nprobe=4, k=5, n_queries=3,
-                       codebook="kmeans")
+                       codebook=sim.kmeans_codebook(emb, 8))
     rows = ivf.collect()
     by_q = {}
     for r in rows:

@@ -7,7 +7,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from spark_streaming_kafka_spark.operators.dsir import (
-    dsir_bucket_logratios,
     dsir_select_topk,
     dsir_weights,
 )
@@ -36,10 +35,12 @@ def test_dsir_prefers_on_target_docs(spark):
 
 
 def test_dsir_ratio_table_bucket_bounded(spark):
+    """Every bucket id lies in [0, buckets): with ONE bucket the ratio
+    table is a single row whose smoothed ratio is exactly 1, so every
+    weight is 0; at 64 buckets every raw document is scored."""
     t, r = _corpus(spark)
-    lam = dsir_bucket_logratios(t, r, buckets=64)
-    assert lam.count() <= 64
-    # All raw tokens are coverable: scoring loses no rows.
+    one = dsir_weights(t, r, buckets=1).collect()
+    assert len(one) == r.count() and {row["logw_sum"] for row in one} == {0.0}
     scored = dsir_weights(t, r, buckets=64)
     assert scored.count() == r.count()
     assert scored.filter(F.col("n_tokens") == 0).count() == 0
@@ -48,38 +49,42 @@ def test_dsir_ratio_table_bucket_bounded(spark):
 def test_dsir_logratio_computed_in_double_space(spark):
     """Round-6 advice: the smoothed ratio must be two DOUBLE products
     (cast before multiply), never a 64-bit integer product that wraps
-    past 2^63 at ~3e9 tokens/side. Pinned two ways: (1) values match a
-    pure-Python float replica exactly at small scale, (2) the analyzed
-    plan contains no long*long multiply feeding the log."""
+    past 2^63 at ~3e9 tokens/side. Pinned two ways: (1) each document's
+    ``logw_sum`` matches a pure-Python float replica of the bucket
+    log-ratios summed per document, (2) the analyzed plan contains no
+    long*long multiply feeding the log."""
     import hashlib
     import math
 
     t, r = _corpus(spark)
     buckets = 64
-    lam = {row["b"]: row["lam"] for row in dsir_bucket_logratios(t, r, buckets).collect()}
-
-    def toks(df):
-        out = []
-        for row in df.collect():
-            out += row["text"].split()
-        return out
+    got = {row["doc_id"]: row["logw_sum"] for row in dsir_weights(t, r, buckets).collect()}
 
     def bucket(term):
         return int(hashlib.md5(term.encode()).hexdigest()[:15], 16) % buckets
 
-    ct, cs = {}, {}
-    for term in toks(t):
-        ct[bucket(term)] = ct.get(bucket(term), 0) + 1
-    for term in toks(r):
-        cs[bucket(term)] = cs.get(bucket(term), 0) + 1
+    def counts(rows):
+        out = {}
+        for row in rows:
+            for term in row["text"].split():
+                out[bucket(term)] = out.get(bucket(term), 0) + 1
+        return out
+
+    raw_rows = r.collect()
+    ct, cs = counts(t.collect()), counts(raw_rows)
     nt, ns = sum(ct.values()), sum(cs.values())
-    for b in set(ct) | set(cs):
+
+    def lam(b):
         num = float(ct.get(b, 0) + 1) * float(ns + buckets)
         den = float(cs.get(b, 0) + 1) * float(nt + buckets)
+        return math.log(num / den)
+
+    for row in raw_rows:
+        want = round(sum(c * lam(b) for b, c in counts([row]).items()), 4)
         # 1-ULP tolerance: JVM Math.log and Python math.log may differ
         # in the last bit; an integer wrap-around would be off by
         # orders of magnitude (or NaN), which this still catches.
-        assert math.isclose(lam[b], math.log(num / den), rel_tol=1e-12), f"bucket {b}"
+        assert math.isclose(got[row["doc_id"]], want, rel_tol=1e-12), f"doc {row['doc_id']}"
 
     # Plan check: the smoothed counts are cast to double BEFORE the
     # multiply — the analyzed plan must contain the explicit
@@ -91,7 +96,7 @@ def test_dsir_logratio_computed_in_double_space(spark):
     # form of this check ended in `or True` and was vacuous.)
     import re
 
-    plan = dsir_bucket_logratios(t, r, buckets)._jdf.queryExecution().analyzed().toString()
+    plan = dsir_weights(t, r, buckets)._jdf.queryExecution().analyzed().toString()
     norm = plan.lower()
     cast_to_double = r"cast\(\({}#\d+l? \+ cast\(1 as bigint\)\) as double\)"
     assert re.search(cast_to_double.format("ct"), norm), plan

@@ -108,32 +108,3 @@ def test_topk_plans_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in explain_str(df, "simple")
 
 
-def test_percentile_approx_switch_accuracy(spark, tables):
-    """The exact↔sketch switch (operators/percentile.py exact=False) is
-    only honest if the t-digest lands near the exact answer on real
-    data: per-group medians over lineitem quantities must agree within
-    a few percent of the value range."""
-    from pyspark.sql import functions as F
-
-    from spark_streaming_kafka_spark.operators.percentile import (
-        group_quantiles,
-    )
-
-    li = tables["lineitem"].select("l_returnflag", "l_quantity")
-    ex = {
-        r["l_returnflag"]: r["q0"]
-        for r in group_quantiles(
-            li, "l_returnflag", "l_quantity", (0.5,), exact=True
-        ).collect()
-    }
-    ap = {
-        r["l_returnflag"]: r["q0"]
-        for r in group_quantiles(
-            li, "l_returnflag", "l_quantity", (0.5,), exact=False
-        ).collect()
-    }
-    lo, hi = li.agg(F.min("l_quantity"), F.max("l_quantity")).collect()[0]
-    span = float(hi - lo) or 1.0
-    assert set(ex) == set(ap)
-    for k in ex:
-        assert abs(ex[k] - ap[k]) <= 0.05 * span

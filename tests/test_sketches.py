@@ -729,74 +729,3 @@ def test_kmv_intersect_prefilter_corrects_small_sides(spark):
     assert abs(ov["inter_est"] - n_inter) / n_inter < 0.45
 
 
-def test_kmv_stream_emitted_hashes_feed_batch_set_ops(spark, tmp_path):
-    """r8: emit_hashes=True turns each monitor row into a portable KMV
-    sketch — exploding the last row per group must reproduce the batch
-    kmv_sketch bit-for-bit, and feeding it to kmv_cross_group_overlap
-    must match the batch-side overlap estimate exactly."""
-    from spark_streaming_kafka_spark.operators.sketches import (
-        kmv_cross_group_overlap,
-        kmv_sketch,
-    )
-    from spark_streaming_kafka_spark.streaming.sketches import kmv_stream_monitor
-
-    k = 32
-    b1 = spark.createDataFrame(
-        [("a", f"u{i}") for i in range(200)] + [("b", f"u{i}") for i in range(150, 350)],
-        "g string, k string",
-    )
-    b2 = spark.createDataFrame(
-        [("a", f"u{i}") for i in range(100, 300)], "g string, k string"
-    )
-    data_dir = tmp_path / "in"
-    data_dir.mkdir()
-    b1.coalesce(1).write.parquet(str(data_dir / "f1"))
-
-    latest: dict[str, list[int]] = {}
-
-    def sink(batch_df, batch_id):
-        for r in batch_df.collect():
-            latest[r["g"]] = list(r["hs"])
-
-    stream = (
-        spark.readStream.schema(b1.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(data_dir / "*"))
-    )
-    q = (
-        kmv_stream_monitor(stream, "k", ["g"], k=k, emit_hashes=True)
-        .writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        b2.coalesce(1).write.parquet(str(data_dir / "f2"))
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    whole = b1.unionByName(b2)
-    batch_sk = kmv_sketch(whole, "k", ["g"], k=k)
-    batch_rows = {
-        g: [h for _, h in sorted((r["pos"], r["h"]) for r in rows)]
-        for g, rows in (
-            ("a", batch_sk.filter(F.col("g") == "a").collect()),
-            ("b", batch_sk.filter(F.col("g") == "b").collect()),
-        )
-    }
-    assert latest == batch_rows  # bit-identical retained hashes
-
-    # rebuild a sketch table from the emitted arrays and run the batch
-    # set-operation estimator on it
-    rebuilt = spark.createDataFrame(
-        [(g, i + 1, h) for g, hs in latest.items() for i, h in enumerate(hs)],
-        "g string, pos int, h long",
-    )
-    from_stream = kmv_cross_group_overlap(rebuilt, "g", "a", "b", k=k).collect()[0]
-    from_batch = kmv_cross_group_overlap(batch_sk, "g", "a", "b", k=k).collect()[0]
-    assert (from_stream["inter_est"], from_stream["jaccard_est"]) == (
-        from_batch["inter_est"],
-        from_batch["jaccard_est"],
-    )

@@ -398,3 +398,146 @@ def test_events_ts_naive_as_utc_under_any_session_timezone(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
     assert utc_vals == pst_vals
+
+
+# --- reference I/O surface (SURVEY S7, S9, S15, S17, S18, kafka_streaming.py)
+
+
+class _Recorder:
+    """Stands in for a DataStreamReader / DataFrameReader /
+    DataStreamWriter: records each builder call and returns itself."""
+
+    def __init__(self):
+        self.calls = []
+
+    def __getattr__(self, name):
+        def call(*args, **kwargs):
+            self.calls.append((name, *args, *sorted(kwargs.items())))
+            return self
+
+        return call
+
+
+def test_socket_stream_source_builds_text_stream(spark):
+    """S7: a streaming one-column text frame; load() opens no socket."""
+    from types import SimpleNamespace
+
+    from spark_streaming_kafka_spark.sources.readers import socket_stream_source
+
+    df = socket_stream_source(spark, "localhost", 9)
+    assert df.isStreaming and df.schema.simpleString() == "struct<value:string>"
+
+    fake = SimpleNamespace(readStream=_Recorder())
+    socket_stream_source(fake, "h", 4242)
+    assert fake.readStream.calls == [
+        ("format", "socket"), ("option", "host", "h"), ("option", "port", "4242"), ("load",),
+    ]
+
+
+def test_write_csv_roundtrips_with_header(spark, tmp_path):
+    """S17: the header line carries the column names; overwrite replaces."""
+    from spark_streaming_kafka_spark.sources.readers import read_csv, write_csv
+
+    path = str(tmp_path / "ratings")
+    df = spark.createDataFrame([(1, 10, 4.5), (2, 11, 3.0)], RATINGS)
+    write_csv(df.limit(1), path)
+    write_csv(df, path)
+    back = read_csv(spark, path, RATINGS)
+    assert sorted(map(tuple, back.collect())) == [(1, 10, 4.5), (2, 11, 3.0)]
+    parts = sorted((tmp_path / "ratings").glob("part-*.csv"))
+    assert parts and all(
+        f.read_text().splitlines()[0] == "user_id,song_id,rating" for f in parts
+    )
+
+
+def test_kafka_sink_writer_options():
+    """S9: the unstarted writer carries broker, topic, checkpoint and
+    output mode; the trigger is set only when asked for."""
+    from types import SimpleNamespace
+
+    from spark_streaming_kafka_spark.sources.kafka import kafka_sink
+
+    base = [
+        ("format", "kafka"),
+        ("option", "kafka.bootstrap.servers", "b:9092"),
+        ("option", "topic", "recs"),
+        ("option", "checkpointLocation", "/ck"),
+    ]
+    df = SimpleNamespace(writeStream=_Recorder())
+    assert kafka_sink(df, "b:9092", "recs", "/ck") is df.writeStream
+    assert df.writeStream.calls == base + [("outputMode", "append")]
+
+    df = SimpleNamespace(writeStream=_Recorder())
+    kafka_sink(df, "b:9092", "recs", "/ck", output_mode="update", trigger_seconds=3)
+    assert df.writeStream.calls == base + [
+        ("outputMode", "update"), ("trigger", ("processingTime", "3 seconds")),
+    ]
+
+
+def test_console_sink_truncates_by_default(spark, capsys):
+    """S18: ``n`` rows, long values cut at 20 characters unless
+    ``truncate=False``."""
+    from spark_streaming_kafka_spark.sources.sinks import console_sink
+
+    long = "x" * 30
+    df = spark.createDataFrame([(i, long) for i in range(3)], "id long, s string")
+    console_sink(df, n=2)
+    out = capsys.readouterr().out
+    assert "only showing top 2 rows" in out and long not in out and "x" * 17 + "..." in out
+    console_sink(df, truncate=False)
+    out = capsys.readouterr().out
+    assert out.count(long) == 3
+
+
+def test_mongo_read_reader_options(spark):
+    """S15: a ``mongodb`` format scan with the connection uri, database
+    and collection; without the connector JAR, Spark names the missing
+    source."""
+    from types import SimpleNamespace
+
+    from spark_streaming_kafka_spark.sources.sinks import mongo_read
+
+    fake = SimpleNamespace(read=_Recorder())
+    mongo_read(fake, "mongodb://m:27017", "music", "lyrics")
+    assert fake.read.calls == [
+        ("format", "mongodb"),
+        ("option", "spark.mongodb.read.connection.uri", "mongodb://m:27017"),
+        ("option", "database", "music"),
+        ("option", "collection", "lyrics"),
+        ("load",),
+    ]
+    with pytest.raises(Exception, match="DATA_SOURCE_NOT_FOUND.*mongodb"):
+        mongo_read(spark, "mongodb://m:27017", "music", "lyrics")
+
+
+def test_build_wordcount_pipeline_runs_on_a_file_stream(spark, tmp_path, monkeypatch):
+    """kafka_streaming.py rebuilt: with the Kafka source swapped for a
+    text-file stream of the same ``value`` bytes, the returned writer
+    runs as a checkpointed console query that keeps one running count
+    per distinct word."""
+    from pyspark.sql import functions as F
+
+    from spark_streaming_kafka_spark.streaming import pipelines
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.txt").write_text("a b a\nc b\n")
+    asked = []
+
+    def fake_source(spark_, servers, topic):
+        asked.append((servers, topic))
+        return spark_.readStream.text(str(src)).select(F.col("value").cast("binary").alias("value"))
+
+    monkeypatch.setattr(pipelines, "kafka_source", fake_source)
+    ckpt = tmp_path / "ckpt"
+    writer = pipelines.build_wordcount_pipeline(spark, "b:9092", "words", str(ckpt), 1)
+    assert asked == [("b:9092", "words")]
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+        progress = q.lastProgress
+    finally:
+        q.stop()
+    assert "Console" in progress["sink"]["description"]
+    assert progress["stateOperators"][0]["numRowsTotal"] == 3  # a, b, c
+    assert (ckpt / "offsets").is_dir()
